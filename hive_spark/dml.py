@@ -68,10 +68,13 @@ def update_frame(
     t: DataFrame, condition: Column, assignments: dict[str, Column]
 ) -> DataFrame:
     """The UPDATE projection (CASE per assigned column) over any target
-    frame — shared by path-backed and versioned-table DML."""
+    frame — shared by path-backed and versioned-table DML. Assigned
+    values take the column's type (Hive store assignment), so
+    `SET dec = dec + x` cannot widen what the table stores."""
     return t.select(
         *[
-            F.when(condition, assignments[c]).otherwise(F.col(c)).alias(c)
+            F.when(condition, assignments[c].cast(t.schema[c].dataType))
+            .otherwise(F.col(c)).alias(c)
             if c in assignments
             else F.col(c)
             for c in t.columns
@@ -206,14 +209,17 @@ def merge_frame(
         insert_ok = insert_ok & not_matched_cond
     keep = keep & (t_marker | insert_ok)
 
+    # updated and inserted values take the column's type (Hive store
+    # assignment), so `SET dec = dec + x` cannot widen the stored type
     out_cols = []
     for c in tcols:
+        typ = target.schema[c].dataType
         expr = F.col(f"t.{c}")
         if matched_update and c in matched_update:
-            expr = F.when(matched, matched_update[c]).otherwise(expr)
+            expr = F.when(matched, matched_update[c].cast(typ)).otherwise(expr)
         if not_matched_insert is not None:
             ins = not_matched_insert.get(c, F.lit(None))
-            expr = F.when(~t_marker, ins).otherwise(expr)
+            expr = F.when(~t_marker, ins.cast(typ)).otherwise(expr)
         out_cols.append(expr.alias(c))
 
     return joined.filter(keep).select(*out_cols)

@@ -61,6 +61,29 @@ Statement rewrites applied before spark.sql (the HiveQL-only surface):
   MacroSemanticAnalyzer.java, GenericUDFMacro.java): macros are
   expression templates, so calls inline textually at rewrite time —
   which also keeps them JVM-side (no UDF wrapper)
+
+Hive-compat retries (statements Hive accepts and Spark refuses at
+analysis): every SQL statement, EXECUTE of a prepared one included,
+runs through `_run_sql`. When Spark raises, the dispatcher reads the
+error condition (``err.getCondition()``, e.g.
+``DATATYPE_MISMATCH.BINARY_OP_DIFF_TYPES``) and tries the fixes that
+`_RETRIES` lists for the full condition, then for its main class
+(``DATATYPE_MISMATCH``). To add a retry:
+- write ``_fix_<name>(spark, stmt, err)``. It returns the corrected SQL
+  text, or None when it does not apply (only a fix that must run the
+  statement itself — a conf toggle, a staged write — returns the
+  DataFrame). Argument types and the failing expression come from
+  ``err.getMessageParameters()`` (`_param`), never from the wording of
+  the message;
+- add it to its condition's tuple in `_RETRIES` (tuple order is
+  priority; the condition must be one Spark defines) and pin a minimal
+  statement in tests/test_hqlscript_retries.py;
+- fix ONE offending site. If the re-issued text raises the SAME
+  condition, the table is consulted again for the next site (at most
+  `_MAX_RETRIES` times); any other error, or one no fix changes,
+  propagates.
+Each fix that fires is logged in ``ScriptResult.retries`` as
+(statement index, condition, fix name).
 """
 
 from __future__ import annotations
@@ -698,9 +721,7 @@ def _exec_dml(spark: SparkSession, res, stmt: str) -> bool:
                 spark, res, name, path,
                 lambda t: dml.update_frame(t, cond, assigns),
             )
-        elif _bucket_spec(spark, name):
-            # bucketed catalog target: path-level CoW would drop bucket
-            # file naming — swap through the catalog instead
+        elif _keeps_catalog_layout(spark, name):
             _rewrite_table_inplace(
                 spark, name, dml.update_frame(spark.table(name), cond, assigns)
             )
@@ -722,7 +743,7 @@ def _exec_dml(spark: SparkSession, res, stmt: str) -> bool:
             _publish_dml(
                 spark, res, name, path, lambda t: dml.delete_frame(t, cond)
             )
-        elif _bucket_spec(spark, name):
+        elif _keeps_catalog_layout(spark, name):
             _rewrite_table_inplace(
                 spark, name, dml.delete_frame(spark.table(name), cond)
             )
@@ -859,7 +880,7 @@ def _exec_dml(spark: SparkSession, res, stmt: str) -> bool:
                     not_matched_cond=not_matched_cond,
                 ),
             )
-        elif _bucket_spec(spark, name):
+        elif _keeps_catalog_layout(spark, name):
             _rewrite_table_inplace(
                 spark, name,
                 dml.merge_frame(
@@ -878,6 +899,15 @@ def _exec_dml(spark: SparkSession, res, stmt: str) -> bool:
             _refresh_catalog_entry(spark, name)
         return True
     return False
+
+
+def _keeps_catalog_layout(spark: SparkSession, name: str) -> bool:
+    """True for a catalog DML target whose layout a path-level CoW
+    rewrite would lose — bucketed (bucket file naming) or partitioned
+    (partition directories; the flat rewrite reads back empty). Those
+    swap through the catalog with _rewrite_table_inplace instead."""
+    meta = _describe_formatted(spark, name)
+    return "# Partition Information" in meta or _bucket_spec(meta) is not None
 
 
 def _refresh_catalog_entry(spark: SparkSession, name: str) -> None:
@@ -4395,6 +4425,13 @@ def _rewrite_tuple_in(stmt: str) -> str:
         i = lhs_open + len(repl)
 
 
+# --- Hive-compat retries ----------------------------------------------------
+# Every `_fix_*` below takes (spark, stmt, err) for a statement Spark
+# refused with `err` and returns the corrected SQL text, or None when it
+# does not apply. `_RETRIES` (after the fixes) keys them by Spark error
+# condition; `_run_sql` is the one dispatcher (see the module docstring).
+
+
 _INSERT_OVERWRITE_HEAD = re.compile(
     r"^(\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?[\w.]+\s*"
     r"(?:PARTITION\s*\([^)]*\)\s*)?)"
@@ -4403,21 +4440,46 @@ _INSERT_OVERWRITE_HEAD = re.compile(
 )
 
 
-def _retry_insert_overwrite_selfread(spark, stmt: str, err: Exception):
+def _condition(err: BaseException) -> str | None:
+    """The Spark error condition (`DATATYPE_MISMATCH.BINARY_OP_DIFF_TYPES`)
+    of a PySpark exception, None for anything else."""
+    get = getattr(err, "getCondition", None)
+    return get() if callable(get) else None
+
+
+def _param(err: BaseException, key: str) -> str:
+    """One message parameter of a Spark error, without the quotes Spark
+    puts around types ("INT"), expressions and identifiers (`fn`)."""
+    params = err.getMessageParameters() or {}
+    return (params.get(key) or "").strip('"`')
+
+
+def _analysis_error(spark, text: str) -> BaseException | None:
+    """The error analyzing `text` raises, or None. Commands are analyzed
+    but not run (CommandExecutionMode.SKIP), so a probe never writes."""
+    state = spark._jsparkSession.sessionState()
+    skip = spark._jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
+    try:
+        state.executePlan(state.sqlParser().parsePlan(text), skip).assertAnalyzed()
+    except Exception as e:
+        return e
+    return None
+
+
+def _fix_insert_overwrite_selfread(spark, stmt: str, err: Exception):
     """INSERT OVERWRITE a table the query also READS (union22.q et al):
     legal in Hive because execution is two-phase — the query writes a
     staging directory, then MoveTask swaps it over the target (ref:
     ql/src/java/org/apache/hadoop/hive/ql/exec/MoveTask.java). Spark's
-    single-phase v1 write refuses; replicate Hive's staging semantics."""
+    single-phase v1 write refuses; replicate Hive's staging semantics.
+    Returns the executed DataFrame: the stage must outlive the write."""
     import shutil
     import tempfile
     import uuid
 
-    if "UNSUPPORTED_OVERWRITE" not in str(err):
-        raise err
     m = _INSERT_OVERWRITE_HEAD.match(stmt)
     if m is None:
-        raise err
+        return None
     head, query = m.group(1), m.group(2)
     stage = os.path.join(
         tempfile.gettempdir(), f"hive_spark_stage_{uuid.uuid4().hex}"
@@ -4435,10 +4497,6 @@ def _retry_insert_overwrite_selfread(spark, stmt: str, err: Exception):
         shutil.rmtree(stage, ignore_errors=True)
 
 
-_BINOP_ERR = re.compile(
-    r'Cannot resolve "\((.+)\)" due to data type mismatch[\s\S]*?'
-    r'incompatible types\s*\("(\w+)" and "([\w(),]+)"\)'
-)
 _BINOP_SPLIT = re.compile(
     r"^(.*?)\s+(=|==|!=|<>|<=|>=|<|>)\s+(.*)$"
 )
@@ -4447,65 +4505,49 @@ _NUMERIC_TYPENAMES = (
 )
 
 
-def _retry_binop_coercion(spark, stmt: str, err: Exception, args=None):
+def _fix_binop_coercion(spark, stmt: str, err: Exception):
     """Hive implicitly compares TIMESTAMP and BOOLEAN with numerics
     (FunctionRegistry.getCommonClassForComparison coerces through
     double — a timestamp becomes seconds.nanos since epoch, a boolean
     becomes 0/1); Spark refuses with BINARY_OP_DIFF_TYPES. Patch the
-    offending comparison (reported verbatim in the error) with the
-    Hive cast and re-run, one comparison per iteration."""
-    cur = stmt
-    last = err
-    for _ in range(64):
-        m = _BINOP_ERR.search(str(last))
-        if not m:
-            raise last
-        expr, lt, rt = m.groups()
-        sm = _BINOP_SPLIT.match(expr)
-        if not sm:
-            raise last
-        lhs, op, rhs = sm.groups()
-        lt, rt = lt.upper(), rt.upper()
+    offending comparison (the error's sqlExpr, operand types in
+    left/right) with the Hive cast, one comparison per retry."""
+    expr = _param(err, "sqlExpr")
+    sm = _BINOP_SPLIT.match(expr[1:-1] if expr.startswith("(") else expr)
+    if not sm:
+        return None
+    lhs, op, rhs = sm.groups()
+    lt, rt = _param(err, "left").upper(), _param(err, "right").upper()
 
-        def _coerce(side: str, typ: str, other: str) -> str | None:
-            if typ == "TIMESTAMP" and other.startswith(_NUMERIC_TYPENAMES):
-                return f"CAST({side} AS DOUBLE)"
-            if typ == "BOOLEAN" and other.startswith(_NUMERIC_TYPENAMES):
-                return f"CAST({side} AS INT)"
-            return None
+    def _coerce(side: str, typ: str, other: str) -> str | None:
+        if typ == "TIMESTAMP" and other.startswith(_NUMERIC_TYPENAMES):
+            return f"CAST({side} AS DOUBLE)"
+        if typ == "BOOLEAN" and other.startswith(_NUMERIC_TYPENAMES):
+            return f"CAST({side} AS INT)"
+        return None
 
-        new_l = _coerce(lhs, lt, rt)
-        new_r = _coerce(rhs, rt, lt)
-        if new_l is None and new_r is None:
-            raise last
-        # match the operand pair with WHATEVER comparison operator the
-        # source used (Spark reports `a != b` as NOT (a = b), so the
-        # error's operator may differ) and keep the source operator; a
-        # bound parameter marker (?) stands in for the reported literal
-        pat = re.compile(
-            re.escape(lhs) + r"\s*(<=|>=|<>|!=|==?|<|>)\s*"
-            + "(" + re.escape(rhs) + r"|\?)",
-            re.I,
-        )
-        patched = pat.sub(
-            lambda sm2: (
-                f"{new_l or lhs} {sm2.group(1)} "
-                + (sm2.group(2) if new_r is None
-                   else f"CAST({sm2.group(2)} AS "
-                        f"{'DOUBLE' if rt == 'TIMESTAMP' else 'INT'})")
-            ),
-            cur, count=1,
-        )
-        if patched == cur:
-            raise last
-        cur = patched
-        try:
-            return spark.sql(cur, args=args or None)
-        except Exception as e2:
-            if "BINARY_OP_DIFF_TYPES" not in str(e2):
-                raise
-            last = e2
-    raise last
+    new_l = _coerce(lhs, lt, rt)
+    new_r = _coerce(rhs, rt, lt)
+    if new_l is None and new_r is None:
+        return None
+    # match the operand pair with WHATEVER comparison operator the
+    # source used (Spark reports `a != b` as NOT (a = b), so the
+    # error's operator may differ) and keep the source operator; a
+    # bound parameter marker (?) stands in for the reported literal
+    pat = re.compile(
+        re.escape(lhs) + r"\s*(<=|>=|<>|!=|==?|<|>)\s*"
+        + "(" + re.escape(rhs) + r"|\?)",
+        re.I,
+    )
+    return pat.sub(
+        lambda sm2: (
+            f"{new_l or lhs} {sm2.group(1)} "
+            + (sm2.group(2) if new_r is None
+               else f"CAST({sm2.group(2)} AS "
+                    f"{'DOUBLE' if rt == 'TIMESTAMP' else 'INT'})")
+        ),
+        stmt, count=1,
+    )
 
 
 def _trunc_char_expr(src: str, dt) -> str | None:
@@ -4579,22 +4621,22 @@ _INSERT_HEAD_ANY = re.compile(
 )
 
 
-def _retry_insert_truncate_charvarchar(spark, stmt: str, err: Exception):
+def _fix_truncate_charvarchar(spark, stmt: str, err: Exception):
     """Hive silently TRUNCATES strings written into char(n)/varchar(n)
     columns (HiveCharWritable/HiveVarcharWritable enforce maxLength on
     write — serde2/io/HiveBaseCharWritable.java); Spark raises
-    EXCEED_LIMIT_LENGTH. On that failure, re-run the insert with each
-    over-length source expression wrapped in substring(., 1, n)."""
-    from pyspark.sql import functions as F
+    EXCEED_LIMIT_LENGTH. Re-select the insert's source positionally with
+    each char/varchar-typed target wrapped in substring(., 1, n)."""
+    from pyspark.sql.types import _parse_datatype_string
 
-    if "EXCEED_LIMIT_LENGTH" not in str(err):
-        raise err
     m = _INSERT_HEAD_ANY.match(stmt)
     if m is None:
-        raise err
-    verb, table, spec, src = m.groups()
+        return None
+    table, spec, src = m.group(2), m.group(3), m.group(4)
     try:
-        cat_cols = spark.catalog.listColumns(table)
+        part_names = {
+            c.name for c in spark.catalog.listColumns(table) if c.isPartition
+        }
         # catalog dataType collapses char(n)/varchar(n) to 'string';
         # DESCRIBE keeps the declared type, which carries the limit
         described = []
@@ -4605,104 +4647,56 @@ def _retry_insert_truncate_charvarchar(spark, stmt: str, err: Exception):
                 break
             described.append((r[0], (r[1] or "").lower()))
     except Exception:
-        raise err
-    part_names = {c.name for c in cat_cols if c.isPartition}
-
-    class _Col:
-        def __init__(self, name, dt):
-            self.name, self.dataType = name, dt
-
-    cols = [_Col(n, t) for n, t in described]
-    part_cols = [c.name for c in cols if c.name in part_names]
-    data_cols = [c for c in cols if c.name not in part_names]
-    static: dict[str, str] = {}
-    dyn_parts: list[str] = []
+        return None
+    types = dict(described)
     if spec:
-        for kv in _split_args(spec):
-            if "=" in kv:
-                k, v = kv.split("=", 1)
-                static[k.strip().strip("`")] = v.strip().strip("'\"")
-            else:
-                dyn_parts.append(kv.strip().strip("`"))
-    elif part_cols:
+        # static keys take no source column; dynamic keys follow the
+        # data columns (Hive FileSinkOperator order)
+        dyn_parts = [
+            kv.strip().strip("`") for kv in _split_args(spec) if "=" not in kv
+        ]
+    else:
         # no PARTITION clause on a partitioned table: all partition
         # columns are dynamic, fed by the trailing select columns
-        dyn_parts = list(part_cols)
-    df = spark.sql(src)
-    # positional mapping: select output covers data columns then any
-    # dynamic partition columns (Hive FileSinkOperator order)
-    expected = [(c.name, (c.dataType or "").lower()) for c in data_cols]
-    expected += [
-        (p, next(
-            ((c.dataType or "").lower() for c in cols if c.name == p), ""
-        ))
-        for p in dyn_parts
-    ]
-    if len(df.columns) != len(expected):
-        raise err
-    from pyspark.sql.types import _parse_datatype_string
-
-    sel = []
-    for i, (name, typ) in enumerate(expected):
-        src_col = F.col(df.columns[i])
+        dyn_parts = [n for n, _ in described if n in part_names]
+    expected = [t for n, t in described if n not in part_names]
+    expected += [types.get(p, "") for p in dyn_parts]
+    if len(spark.sql(src).columns) != len(expected):
+        return None
+    cols, hit = [], False
+    for i, typ in enumerate(expected):
         sub = None
         if "char(" in typ:  # char(...) or varchar(...), maybe nested
             try:
-                sub = _trunc_char_expr(
-                    f"`{df.columns[i]}`", _parse_datatype_string(typ)
-                )
+                sub = _trunc_char_expr(f"_c{i}", _parse_datatype_string(typ))
             except Exception:
                 sub = None
-        if sub:
-            sel.append(F.expr(sub).alias(name))
-        else:
-            sel.append(src_col.alias(name))
-    out = df.select(*sel)
-    for p in part_cols:
-        if p in static:
-            ptyp = next(
-                (c.dataType for c in cols if c.name == p), "string"
-            )
-            out = out.withColumn(p, F.lit(static[p]).cast(ptyp))
-    out = out.select(*[c.name for c in cols])
-    overwrite = verb.upper() == "OVERWRITE"
-    prev = None
-    if overwrite and (dyn_parts or static):
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-    try:
-        out.write.insertInto(table, overwrite=overwrite)
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
-    return spark.createDataFrame([], "x string").limit(0).drop("x")
+        hit = hit or sub is not None
+        cols.append(sub or f"_c{i}")
+    if not hit:
+        return None
+    names = ", ".join(f"_c{i}" for i in range(len(expected)))
+    return (
+        f"{stmt[:m.start(4)]}SELECT {', '.join(cols)}"
+        f" FROM ({src}) __trunc({names})"
+    )
 
 
-def _retry_inline_values(spark, stmt: str, err: Exception):
+def _fix_inline_values(spark, stmt: str, err: Exception):
     """INSERT ... VALUES rows Spark's inline-table resolver refuses —
     mixed literal types in a column (Hive casts each value to the TARGET
     column type: ql/.../parse/SemanticAnalyzer genValuesTempTable) or
     the DEFAULT keyword (resolves to the column default, NULL when none
     is declared). Rebuild as UNION ALL selects with explicit casts."""
-    if "INLINE_TABLE" not in str(err) and not re.search(
-        r"(?i)`default`", str(err)
-    ):
-        raise err
     m = re.match(
         r"(?is)^(\s*(?:EXPLAIN\s+(?:\w+\s+)?)?"
         r"INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?`?([\w.]+)`?\s*"
-        r"(?:PARTITION\s*\(([^)]*)\))?\s*"
+        r"(?:PARTITION\s*\(([^)]*)\)\s*)?"
         r"(?:\(([^)]*)\)\s*)?)VALUES\s*([\s\S]+)$",
         stmt,
     )
     if m is None:
-        raise err
+        return None
     head, verb, table, pspec, col_list, rows_text = m.groups()
     try:
         described = []
@@ -4713,7 +4707,7 @@ def _retry_inline_values(spark, stmt: str, err: Exception):
                 break
             described.append((r[0], r[1]))
     except Exception:
-        raise err
+        return None
     # column defaults from SHOW CREATE TABLE (DEFAULT <expr> per column)
     defaults = _column_defaults(spark, table)
     static = {}
@@ -4751,12 +4745,12 @@ def _retry_inline_values(spark, stmt: str, err: Exception):
         if depth >= 1:
             cur.append(ch)
     if not rows:
-        raise err
+        return None
     selects = []
     for row in rows:
         items = _split_args(row)
         if len(items) != len(targets):
-            raise err
+            return None
         exprs = []
         for (cname, ctyp), item in zip(targets, items):
             it = item.strip()
@@ -4766,21 +4760,20 @@ def _retry_inline_values(spark, stmt: str, err: Exception):
         selects.append("SELECT " + ", ".join(exprs))
     # re-issue through Spark's own insert path (EXPLAIN prefix, column
     # lists and partition specs all keep their native semantics)
-    return spark.sql(head + " UNION ALL ".join(selects))
+    return head + " UNION ALL ".join(selects)
 
 
-def _retry_common_category(spark, stmt: str, err: Exception):
+def _fix_common_category(spark, stmt: str, err: Exception):
     """greatest/least/array/coalesce over mixed type categories: Hive
     falls back to the STRING common category (FunctionRegistry
     .getCommonCategory / common class for comparison); Spark raises
     DATA_DIFF_TYPES. Cast every argument of the offending function."""
-    m = re.search(r'"(greatest|least|array|coalesce)\(', str(err))
-    if m is None:
-        raise err
-    fn = m.group(1)
-    # a star call (array(*)) carries no arg text to cast — the analyzer
-    # error message shows the expanded column list; borrow it
-    em = re.search(rf'"{fn}\((.*?)\)"', str(err), re.S)
+    fn = _param(err, "functionName").lower()
+    if fn not in ("greatest", "least", "array", "coalesce"):
+        return None
+    # a star call (array(*)) carries no arg text to cast — the error's
+    # sqlExpr shows the expanded column list; borrow it
+    em = re.fullmatch(rf"{fn}\((.*)\)", _param(err, "sqlExpr"), re.S | re.I)
     expanded = (
         [c.strip() for c in em.group(1).split(",") if c.strip()]
         if em and re.fullmatch(r"[\w.,\s`]+", em.group(1) or "")
@@ -4791,16 +4784,13 @@ def _retry_common_category(spark, stmt: str, err: Exception):
         return (f"{fn}("
                 + ", ".join(f"CAST(({x}) AS STRING)" for x in args) + ")")
 
-    fixed = _rewrite_calls(
+    return _rewrite_calls(
         stmt, fn,
         lambda a: (
             _casts(a) if len(a) > 1
             else (_casts(expanded) if a == ["*"] and expanded else None)
         ),
     )
-    if fixed == stmt:
-        raise err
-    return spark.sql(fixed)
 
 
 _TS_NUMERIC_AGGS = {
@@ -4809,13 +4799,17 @@ _TS_NUMERIC_AGGS = {
 }
 
 
-def _retry_ts_numeric_agg(spark, stmt: str, err: Exception):
+def _fix_ts_numeric_agg(spark, stmt: str, err: Exception):
     """Numeric aggregates over a TIMESTAMP column: Hive converts the
     value to fractional epoch seconds (PrimitiveObjectInspectorUtils
     getDouble); Spark requires DOUBLE input. Cast the argument."""
-    m = re.search(r'"(\w+)\(', str(err))
+    if "DOUBLE" not in _param(err, "requiredType") or not _param(
+        err, "inputType"
+    ).startswith("TIMESTAMP"):
+        return None
+    m = re.match(r"(\w+)\(", _param(err, "sqlExpr"))
     if m is None or m.group(1).lower() not in _TS_NUMERIC_AGGS:
-        raise err
+        return None
     # the analyzer reports the RESOLVED name (variance -> var_samp), so
     # rewrite every statistical aggregate spelled in the statement
     fixed = stmt
@@ -4830,149 +4824,135 @@ def _retry_ts_numeric_agg(spark, stmt: str, err: Exception):
                 and not re.match(r"(?i)\s*CAST\s*\(", a[0]) else None
             ),
         )
-    if fixed == stmt:
-        raise err
-    return spark.sql(fixed)
+    return fixed
 
 
-def _retry_unorderable_orderby(spark, stmt: str, err: Exception):
+def _fix_interval_datepart(spark, stmt: str, err: Exception):
+    """Hive's year()/month()/…/second() accept INTERVAL inputs
+    (interval_udf.q; ref: udf/UDFYear etc. via HiveIntervalYearMonth) —
+    Spark wants EXTRACT; the rewrite is type-safe for date/timestamp
+    args too."""
+    if "INTERVAL" not in _param(err, "inputType").upper() or not re.match(
+        r"(?i)(year|month|day|hour|minute|second)\(", _param(err, "sqlExpr")
+    ):
+        return None
+    return re.sub(
+        r"(?i)\b(year|month|day|hour|minute|second)\s*\(([^()]+)\)",
+        lambda m2: (
+            f"CAST(EXTRACT({m2.group(1).upper()} FROM"
+            f" {m2.group(2)}) AS INT)"
+        ),
+        stmt,
+    )
+
+
+def _fix_unorderable_orderby(spark, stmt: str, err: Exception):
     """ORDER BY over a MAP column: Hive sorts complex types by their
     serialized form (ObjectInspectorUtils.compare); Spark's sortorder
     refuses maps. Sort on the JSON rendering instead — a deterministic
     total order with the same grouping of equal values."""
-    for _ in range(8):
-        msg = str(err)
-        if "INVALID_ORDERING_TYPE" not in msg or "sortorder" not in msg:
-            raise err
-        m = re.search(r'Cannot resolve "(.+?)(?:\s+(?:ASC|DESC))?'
-                      r'(?:\s+NULLS\s+\w+)?" due to', msg)
-        if m is None:
-            raise err
-        item = m.group(1).strip()
-        om = None
-        for om2 in re.finditer(r"(?i)\bORDER\s+BY\b", stmt):
-            om = om2  # last ORDER BY = the statement-level sort
-        if om is None:
-            raise err
-        head, tail = stmt[: om.end()], stmt[om.end():]
-        pat = re.compile(rf"(^|[\s,(]){re.escape(item)}(?=$|[\s,)])")
-        fixed_tail, n = pat.subn(rf"\1to_json({item})", tail, count=1)
-        if n == 0:
-            raise err
-        stmt = head + fixed_tail
-        try:
-            return spark.sql(stmt)
-        except Exception as e2:
-            err = e2
-    raise err
+    if _param(err, "functionName") != "sortorder":
+        return None
+    item = re.sub(
+        r"(?:\s+(?:ASC|DESC))?(?:\s+NULLS\s+\w+)?$", "",
+        _param(err, "sqlExpr"),
+    ).strip()
+    om = None
+    for om2 in re.finditer(r"(?i)\bORDER\s+BY\b", stmt):
+        om = om2  # last ORDER BY = the statement-level sort
+    if om is None or not item:
+        return None
+    head, tail = stmt[: om.end()], stmt[om.end():]
+    pat = re.compile(rf"(^|[\s,(]){re.escape(item)}(?=$|[\s,)])")
+    return head + pat.sub(rf"\1to_json({item})", tail, count=1)
 
 
-def _retry_string_range_frame(spark, stmt: str, err: Exception):
+def _fix_string_range_frame(spark, stmt: str, err: Exception):
     """RANGE frame with a numeric offset over a STRING sort key: Hive's
     StringValueBoundaryScanner (ref: ql/.../PTFRowContainer /
     ValueBoundaryScanner.java) treats ANY unequal key as exceeding any
     amount, so the frame degenerates to the current row's PEER GROUP —
     exactly `RANGE BETWEEN CURRENT ROW AND CURRENT ROW`. Spark refuses
-    the numeric offset outright; rewrite the offending frame (named in
-    the error, with N PRECEDING normalized to (-N) FOLLOWING) and
-    re-issue, looping while each retry surfaces another frame."""
-    for _ in range(16):
-        msg = str(err)
-        if "SPECIFIED_WINDOW_FRAME_UNACCEPTED_TYPE" not in msg or not re.search(
-            r'"(STRING|VARCHAR[^"]*|CHAR[^"]*|BOOLEAN|BINARY)"', msg.upper()
-        ):
-            raise err
-        m = re.search(
-            r'RANGE BETWEEN (\(- )?(\d+|CURRENT|UNBOUNDED)\)?'
-            r' (ROW|PRECEDING|FOLLOWING)'
-            r' AND (\(- )?(\d+|CURRENT|UNBOUNDED)\)?'
-            r' ?(ROW|PRECEDING|FOLLOWING)?',
-            msg,
-        )
-        if m is None:
-            raise err
+    the numeric offset outright; rewrite the offending frame (the
+    error's sqlExpr, with N PRECEDING normalized to (-N) FOLLOWING)."""
+    if not re.match(
+        r"(STRING|VARCHAR|CHAR|BOOLEAN|BINARY)", _param(err, "exprType").upper()
+    ):
+        return None
+    m = re.search(
+        r'RANGE BETWEEN (\(- )?(\d+|CURRENT|UNBOUNDED)\)?'
+        r' (ROW|PRECEDING|FOLLOWING)'
+        r' AND (\(- )?(\d+|CURRENT|UNBOUNDED)\)?'
+        r' ?(ROW|PRECEDING|FOLLOWING)?',
+        _param(err, "sqlExpr"),
+    )
+    if m is None:
+        return None
 
-        def _orig(neg, n, kind):
-            if n == "CURRENT":
-                return r"current\s+row"
-            if n == "UNBOUNDED":
-                return rf"unbounded\s+{kind.lower()}"
-            # Spark normalizes N PRECEDING to (-N) FOLLOWING in messages
-            if neg and kind == "FOLLOWING":
-                kind = "PRECEDING"
-            elif neg and kind == "PRECEDING":
-                kind = "FOLLOWING"
-            return rf"{n}\s+{kind.lower()}"
+    def _orig(neg, n, kind):
+        if n == "CURRENT":
+            return r"current\s+row"
+        if n == "UNBOUNDED":
+            return rf"unbounded\s+{kind.lower()}"
+        # Spark normalizes N PRECEDING to (-N) FOLLOWING in messages
+        if neg and kind == "FOLLOWING":
+            kind = "PRECEDING"
+        elif neg and kind == "PRECEDING":
+            kind = "FOLLOWING"
+        return rf"{n}\s+{kind.lower()}"
 
-        lo = _orig(m.group(1), m.group(2), m.group(3))
-        hi = _orig(m.group(4), m.group(5), m.group(6) or "ROW")
-        alts = [rf"between\s+{lo}\s+and\s+{hi}"]
-        if hi == r"current\s+row":
-            alts.append(lo)  # Hive shorthand: `range 1 preceding`
-        pat = re.compile(
-            rf"(?i)\brange\s+(?:{'|'.join(alts)})(?!\s+and\b)"
-        )
-        # only NUMERIC bounds degenerate to the peer boundary (Spark's
-        # RANGE CURRENT ROW = first/last peer, matching the scanner);
-        # UNBOUNDED sides keep their reach
-        def _rep(n, kind):
-            if n == "UNBOUNDED":
-                return f"UNBOUNDED {kind}"
-            return "CURRENT ROW"
-
-        lo_rep = _rep(m.group(2), "PRECEDING")
-        hi_rep = _rep(m.group(5), "FOLLOWING")
-        rep = f"RANGE BETWEEN {lo_rep} AND {hi_rep}"
-        matches = list(pat.finditer(stmt))
-        if not matches:
-            raise err
-        # the frame TEXT alone can't tell the offending window apart
-        # from a valid numeric-keyed one sharing it — probe each
-        # occurrence singly and return the first rewrite Spark accepts
-        # (rewriting only a legal numeric-keyed frame leaves the error
-        # in place, so it is never the accepted probe)
-        errs = []
-        for mo in matches:
-            cand = stmt[: mo.start()] + rep + stmt[mo.end():]
-            if cand == stmt:
-                errs.append(None)
-                continue
-            try:
-                return spark.sql(cand)
-            except Exception as e2:
-                errs.append(e2)
-        if not any(errs):
-            raise err
-        # >=2 offending frames: keep the first effective single rewrite
-        # and loop on ITS error (reparsed at the top for the next frame)
-        i = next(i for i, e in enumerate(errs) if e is not None)
-        mo = matches[i]
-        stmt = stmt[: mo.start()] + rep + stmt[mo.end():]
-        err = errs[i]
-    raise err
+    lo = _orig(m.group(1), m.group(2), m.group(3))
+    hi = _orig(m.group(4), m.group(5), m.group(6) or "ROW")
+    alts = [rf"between\s+{lo}\s+and\s+{hi}"]
+    if hi == r"current\s+row":
+        alts.append(lo)  # Hive shorthand: `range 1 preceding`
+    pat = re.compile(
+        rf"(?i)\brange\s+(?:{'|'.join(alts)})(?!\s+and\b)"
+    )
+    # only NUMERIC bounds degenerate to the peer boundary (Spark's
+    # RANGE CURRENT ROW = first/last peer, matching the scanner);
+    # UNBOUNDED sides keep their reach
+    lo_rep = "UNBOUNDED PRECEDING" if m.group(2) == "UNBOUNDED" else "CURRENT ROW"
+    hi_rep = "UNBOUNDED FOLLOWING" if m.group(5) == "UNBOUNDED" else "CURRENT ROW"
+    rep = f"RANGE BETWEEN {lo_rep} AND {hi_rep}"
+    # the frame TEXT alone can't tell the offending window apart from a
+    # valid numeric-keyed one sharing it — analyze each single-site
+    # rewrite and take the first Spark accepts (rewriting only a legal
+    # numeric-keyed frame leaves the error in place); with >=2 offending
+    # frames none is accepted, so take the first and let the next retry
+    # find the next frame
+    cands = [
+        stmt[: mo.start()] + rep + stmt[mo.end():]
+        for mo in pat.finditer(stmt)
+    ]
+    return next(
+        (c for c in cands if _analysis_error(spark, c) is None),
+        cands[0] if cands else None,
+    )
 
 
 _MAP_CMP_OPND = r"(map\((?:[^()]|\([^()]*\))*\)|\w+(?:\.\w+)*)"
 
 
-def _retry_map_comparison(spark, stmt: str, err: Exception):
+def _fix_map_comparison(spark, stmt: str, err: Exception):
     """Hive compares MAP values by deep equality (equals_map_types.q,
     explode_null.q; ref: ObjectInspectorUtils.compare map branch) —
     Spark refuses ordering on MapType. Canonicalize each failing
     operand to array_sort(map_entries(x)): arrays of (key,value)
     structs ARE comparable, and the sort removes key-order sensitivity.
-    Only operands named in the analyzer error (or literal map(...)
+    Only operands named in the error's sqlExpr (or literal map(...)
     calls) are wrapped, so non-map comparisons in the same statement
     stay untouched."""
-    q = re.search(r'"\((.+?)\)" due to data type mismatch', str(err))
-    ids = set()
-    if q:
-        ids = {
-            w.lower()
-            for w in re.findall(r"\b[a-zA-Z_]\w*\b", q.group(1))
-            if w.lower() not in ("in", "map", "is", "not", "distinct",
-                                 "from", "null")
-        }
+    if _param(err, "functionName") == "sortorder" or not _param(
+        err, "dataType"
+    ).startswith("MAP<"):
+        return None  # a map sort key is _fix_unorderable_orderby's
+    ids = {
+        w.lower()
+        for w in re.findall(r"\b[a-zA-Z_]\w*\b", _param(err, "sqlExpr"))
+        if w.lower() not in ("in", "map", "is", "not", "distinct",
+                             "from", "null")
+    }
 
     def _qual(x: str) -> bool:
         return x.lower().startswith("map(") or x.lower() in ids
@@ -5015,7 +4995,7 @@ def _retry_map_comparison(spark, stmt: str, err: Exception):
         ),
         out,
     )
-    out = re.sub(
+    return re.sub(
         rf"(?i){_MAP_CMP_OPND}\s*(=|==|<>|!=|<=>)\s*{_MAP_CMP_OPND}",
         lambda m: (
             f"{canon(m.group(1))} {m.group(2)} {canon(m.group(3))}"
@@ -5023,18 +5003,16 @@ def _retry_map_comparison(spark, stmt: str, err: Exception):
         ),
         out,
     )
-    if out == stmt:
-        raise err
-    return spark.sql(out)
 
 
-def _retry_window_agg_alias(spark, stmt: str, err: Exception):
+def _fix_window_agg_alias(spark, stmt: str, err: Exception):
     """Hive lets a window spec reference a sibling select-item ALIAS of
     an aggregate (`max(f) mf, rank() over (order by mf)` —
     distinct_windowing_no_cbo.q, groupby_grouping_window.q; windows
     evaluate after GROUP BY, so the alias binds to the aggregate).
-    Spark raises LATERAL_COLUMN_ALIAS_IN_WINDOW / MISSING_AGGREGATION.
-    Inline the aggregate expression into the window spec."""
+    Spark raises LATERAL_COLUMN_ALIAS_IN_WINDOW, or MISSING_AGGREGATION
+    when the alias shadows a column. Inline the aggregate expression
+    into the window spec."""
     aliases = {}
     for m in re.finditer(
         r"(?i)\b((?:max|min|sum|count|avg)\s*\([^()]*\))\s+"
@@ -5042,9 +5020,7 @@ def _retry_window_agg_alias(spark, stmt: str, err: Exception):
         stmt,
     ):
         aliases[m.group(2).lower()] = m.group(1)
-    if not aliases:
-        raise err
-    out, changed = stmt, False
+    out = stmt
     for om in list(re.finditer(r"(?i)\bOVER\s*\(", stmt)):
         close = _matching_paren(stmt, om.end() - 1)
         if close < 0:
@@ -5057,13 +5033,10 @@ def _retry_window_agg_alias(spark, stmt: str, err: Exception):
             )
         if new_span != span:
             out = out.replace(span, new_span)
-            changed = True
-    if not changed:
-        raise err
-    return spark.sql(out)
+    return out
 
 
-def _retry_literal_filter(spark, stmt: str, err: Exception):
+def _fix_literal_filter(spark, stmt: str, err: Exception):
     """Hive folds a non-boolean literal in boolean context to a truth
     value (filter_literals.q: `WHERE 'foo'` scans unfiltered — the CBO
     plan drops the filter; ref UDFToBoolean): non-empty string / nonzero
@@ -5081,24 +5054,16 @@ def _retry_literal_filter(spark, stmt: str, err: Exception):
             val = float(lit) != 0
         return lead + ("TRUE" if val else "FALSE")
 
-    fixed = re.sub(
+    return re.sub(
         r"(?i)(\bWHERE\s+|\bAND\s+|\bOR\s+|\bNOT\s+|\bHAVING\s+)"
         r"('[^']*'|-?\d+(?:\.\d+)?|NULL)"
         r"(?=\s*(?:AND\b|OR\b|GROUP\b|ORDER\b|LIMIT\b|UNION\b|\)|;|$))",
         repl,
         stmt,
     )
-    if fixed == stmt:
-        raise err
-    try:
-        return spark.sql(fixed)
-    except Exception as e2:
-        if "FILTER_NOT_BOOLEAN" in str(e2):
-            return _retry_literal_filter(spark, fixed, err)
-        raise
 
 
-def _retry_orderby_hidden_grouping_col(spark, stmt: str, err: Exception):
+def _fix_hidden_grouping_col(spark, stmt: str, err: Exception):
     """GROUPING SETS + ORDER BY on a grouping column that is NOT in the
     select list (groupby_grouping_sets_limit.q): Hive resolves the
     hidden column; Spark's missing-attribute resolution gives up under
@@ -5106,7 +5071,7 @@ def _retry_orderby_hidden_grouping_col(spark, stmt: str, err: Exception):
     order columns (keeping ORDER BY + LIMIT inside, where they bind)
     and an outer projection of the original select list."""
     if not re.search(r"(?i)\b(GROUPING\s+SETS|CUBE|ROLLUP)\b", stmt):
-        raise err
+        return None
     m = re.match(
         r"(?is)^\s*SELECT\s+(.*?)\s+(FROM\s+.*?)"
         r"(?:\s+HAVING\s+(.*?))?"
@@ -5115,7 +5080,7 @@ def _retry_orderby_hidden_grouping_col(spark, stmt: str, err: Exception):
         stmt,
     )
     if not m or (m.group(3) is None and m.group(4) is None):
-        raise err
+        return None
     sl, body = m.group(1), m.group(2)
     hv, ob, lim = m.group(3), m.group(4) or "", m.group(5) or ""
     items = _split_args(sl)
@@ -5178,7 +5143,7 @@ def _retry_orderby_hidden_grouping_col(spark, stmt: str, err: Exception):
                     cond, changed = new_cond, True
         where = f" WHERE {cond}"
     if not changed:
-        raise err
+        return None
     inner = (
         f"SELECT {', '.join(inner_items + extra)} {body}"
         + (f" ORDER BY {', '.join(ob_parts)}{lim}" if ob and not hv else "")
@@ -5187,17 +5152,17 @@ def _retry_orderby_hidden_grouping_col(spark, stmt: str, err: Exception):
         f"SELECT {', '.join(names)} FROM ({inner}) __hsub{where}"
         + (f" ORDER BY {', '.join(ob_parts)}{lim}" if ob and hv else "")
     )
-    return spark.sql(outer)
+    return outer
 
 
-def _retry_partial_cte_aliases(spark, stmt: str, err: Exception):
+def _fix_partial_cte_aliases(spark, stmt: str, err: Exception):
     """Hive permits a PARTIAL column-alias list on a CTE — `with cte1(a)
     as (select x, y ...)` renames only the first k output columns and
     keeps the rest (cte_8.q). Spark requires the list to cover every
     column (ASSIGNMENT_ARITY_MISMATCH): pad each short list with the
     body's own output names."""
     if not re.search(r"(?i)\bWITH\b", stmt):
-        raise err
+        return None
     edits = []
     for m in re.finditer(r"(?i)\b(\w+)\s*\(([\w\s,`]+)\)\s+AS\s*\(", stmt):
         open_i = m.end() - 1
@@ -5213,31 +5178,253 @@ def _retry_partial_cte_aliases(spark, stmt: str, err: Exception):
         if 0 < len(aliases) < len(cols):
             full = aliases + [f"`{c}`" for c in cols[len(aliases):]]
             edits.append((m.start(2), m.end(2), ", ".join(full)))
-    if not edits:
-        raise err
     for a, b, repl in sorted(edits, reverse=True):
         stmt = stmt[:a] + repl + stmt[b:]
-    return spark.sql(stmt)
+    return stmt
 
 
-def _retry_view_autoalias(spark, stmt: str, err: Exception):
+def _fix_view_autoalias(spark, stmt: str, err: Exception):
     """Hive names unaliased view expression columns `_c<i>`
     (SemanticAnalyzer's autogenerated column aliases); Spark refuses the
-    CREATE VIEW outright. On that specific failure, rewrite every
-    unaliased select-list expression in place and re-issue."""
-    if "WITHOUT_ALIAS" not in str(err) and \
-            "COLUMN_ALREADY_EXISTS" not in str(err):
-        raise err
+    CREATE VIEW outright — WITHOUT_ALIAS, or COLUMN_ALREADY_EXISTS when
+    duplicate unaliased literals ('12', '12') collide first. Rewrite
+    every unaliased select-list expression in place."""
     m = _CREATE_VIEW.match(stmt)
     if m is None:
-        raise err
+        return None
     body = m.group(2).rstrip().rstrip(";")
     fixed = _autoalias_select_lists(
         body, top_positions=_select_item_positions(spark, body)
     )
-    if fixed == body:
+    return f"{m.group(1)}AS {fixed}" if fixed != body else None
+
+
+def _fix_ctas_autoalias(spark, stmt: str, err: Exception):
+    """CTAS whose select list repeats an unaliased expression: Hive
+    names them _c<i> (SemanticAnalyzer autogen aliases); Spark reuses
+    the expression text and collides."""
+    if not re.match(
+        r"(?i)\s*CREATE\s+(?:TEMPORARY\s+)?(?:EXTERNAL\s+)?TABLE\b", stmt
+    ):
+        return None
+    return _autoalias_select_lists(stmt)
+
+
+def _fix_temp_view(spark, stmt: str, err: Exception):
+    """A persistent view over a handler-backed temp view: Hive stores it
+    in the metastore; the session-lived temp analog preserves every
+    read that follows."""
+    return re.sub(
+        r"(?i)^(\s*CREATE\s+(?:OR\s+REPLACE\s+)?)VIEW\b",
+        r"\1TEMPORARY VIEW",
+        stmt,
+    )
+
+
+def _fix_tuple_in(spark, stmt: str, err: Exception):
+    """`(a, b) IN ((..), (..))` whose rows mix types: Spark compares
+    the tuples as structs and refuses; Hive compares field by field."""
+    if "named_struct(" not in _param(err, "sqlExpr"):
+        return None
+    return _rewrite_tuple_in(stmt)
+
+
+def _fix_group_by_literal(spark, stmt: str, err: Exception):
+    """Hive defaults hive.groupby.position.alias=false: GROUP BY 1 is
+    the LITERAL 1, not an ordinal. Re-runs the statement with Spark's
+    ordinals off, so it returns the DataFrame rather than text."""
+    prev = spark.conf.get("spark.sql.groupByOrdinal", "true")
+    spark.conf.set("spark.sql.groupByOrdinal", "false")
+    try:
+        return spark.sql(stmt)
+    finally:
+        spark.conf.set("spark.sql.groupByOrdinal", prev)
+
+
+def _fix_grouping_id_order(spark, stmt: str, err: Exception):
+    """Hive permits grouping__id args in ANY order; fold to the standard
+    bit expression over grouping()."""
+    return _rewrite_calls(
+        stmt, "grouping_id",
+        lambda a: (
+            "CAST(("
+            + " + ".join(
+                f"grouping({x}) * {1 << (len(a) - 1 - i)}"
+                for i, x in enumerate(a)
+            )
+            + ") AS BIGINT)"
+        ) if a else None,
+    )
+
+
+def _fix_grouping_base(spark, stmt: str, err: Exception):
+    """grouping()/grouping_id() under a PLAIN group by: every group is a
+    base group, so Hive returns 0."""
+    return _rewrite_calls(
+        stmt=stmt, name="grouping(?:_id|__id)?", build=lambda a: "0"
+    )
+
+
+def _fix_wide_literal_double(spark, stmt: str, err: Exception):
+    """Numeric literal wider than DECIMAL(38): Hive types it DOUBLE
+    (json_serde3.q 1e39-scale constants); Spark errors at parse —
+    demote just those literals."""
+    return re.sub(
+        r"\b\d[\d.]*\b",
+        lambda m2: (
+            m2.group(0) + "D"
+            if sum(c.isdigit() for c in m2.group(0)) > 38
+            else m2.group(0)
+        ),
+        stmt,
+    )
+
+
+def _fix_time_range_frame(spark, stmt: str, err: Exception):
+    """Hive's RANGE amounts over time keys are SECONDS for timestamps /
+    DAYS for dates (ref: ValueBoundaryScanner Timestamp/DateValueBoundary
+    Scanner) — Spark wants interval literals."""
+    key = _param(err, "orderSpecType").upper()
+    if not key.startswith(("TIMESTAMP", "DATE")):
+        return None
+    unit = "SECOND" if key.startswith("TIMESTAMP") else "DAY"
+    fixed = re.sub(
+        r"(?i)\brange\s+between\s+(\d+)\s+"
+        r"(preceding|following)\s+and\s+"
+        r"(\d+\s+|current\s+)(preceding|following|row)",
+        lambda m2: (
+            f"RANGE BETWEEN INTERVAL '{m2.group(1)}'"
+            f" {unit} {m2.group(2).upper()} AND "
+            + (
+                "CURRENT ROW"
+                if m2.group(3).strip().upper() == "CURRENT"
+                else (
+                    f"INTERVAL '{m2.group(3).strip()}'"
+                    f" {unit} {m2.group(4).upper()}"
+                )
+            )
+        ),
+        stmt,
+    )
+    fixed = re.sub(
+        r"(?i)\brange\s+between\s+current\s+row\s+and\s+"
+        r"(\d+)\s+(preceding|following)",
+        lambda m2: (
+            "RANGE BETWEEN CURRENT ROW AND INTERVAL"
+            f" '{m2.group(1)}' {unit} {m2.group(2).upper()}"
+        ),
+        fixed,
+    )
+    fixed = re.sub(
+        r"(?i)\brange\s+between\s+unbounded\s+preceding"
+        r"\s+and\s+(\d+)\s+(preceding|following)",
+        lambda m2: (
+            "RANGE BETWEEN UNBOUNDED PRECEDING AND "
+            f"INTERVAL '{m2.group(1)}' {unit} "
+            f"{m2.group(2).upper()}"
+        ),
+        fixed,
+    )
+    fixed = re.sub(
+        r"(?i)\brange\s+between\s+(\d+)\s+"
+        r"(preceding|following)\s+and\s+unbounded"
+        r"\s+following",
+        lambda m2: (
+            f"RANGE BETWEEN INTERVAL '{m2.group(1)}' "
+            f"{unit} {m2.group(2).upper()} AND "
+            "UNBOUNDED FOLLOWING"
+        ),
+        fixed,
+    )
+    # Hive frame shorthand: `range N preceding` =
+    # BETWEEN N PRECEDING AND CURRENT ROW
+    fixed = re.sub(
+        r"(?i)\brange\s+(\d+)\s+preceding(?!\s+and\b)",
+        lambda m2: (
+            f"RANGE BETWEEN INTERVAL '{m2.group(1)}' "
+            f"{unit} PRECEDING AND CURRENT ROW"
+        ),
+        fixed,
+    )
+    return fixed
+
+
+# Spark error condition -> the fixes to try, in order. The dispatcher
+# looks up the full condition, then its main class (the part before the
+# first dot), so a main-class entry covers every subclass.
+_RETRIES: dict[str, tuple] = {
+    "CREATE_PERMANENT_VIEW_WITHOUT_ALIAS": (_fix_view_autoalias,),
+    "COLUMN_ALREADY_EXISTS": (_fix_view_autoalias, _fix_ctas_autoalias),
+    "INVALID_TEMP_OBJ_REFERENCE": (_fix_temp_view,),
+    "DATATYPE_MISMATCH": (_fix_tuple_in,),
+    "DATATYPE_MISMATCH.DATA_DIFF_TYPES": (_fix_common_category,),
+    "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE": (
+        _fix_ts_numeric_agg, _fix_interval_datepart,
+    ),
+    "GROUP_BY_POS_AGGREGATE": (_fix_group_by_literal,),
+    "GROUP_BY_POS_OUT_OF_RANGE": (_fix_group_by_literal,),
+    "GROUPING_ID_COLUMN_MISMATCH": (_fix_grouping_id_order,),
+    "DATATYPE_MISMATCH.INVALID_ORDERING_TYPE": (
+        _fix_unorderable_orderby, _fix_map_comparison,
+    ),
+    "UNSUPPORTED_GROUPING_EXPRESSION": (_fix_grouping_base,),
+    "ASSIGNMENT_ARITY_MISMATCH": (_fix_partial_cte_aliases,),
+    "DATATYPE_MISMATCH.FILTER_NOT_BOOLEAN": (_fix_literal_filter,),
+    "UNSUPPORTED_FEATURE.LATERAL_COLUMN_ALIAS_IN_WINDOW": (
+        _fix_window_agg_alias,
+    ),
+    "MISSING_AGGREGATION": (_fix_window_agg_alias,),
+    "UNRESOLVED_COLUMN": (_fix_hidden_grouping_col,),
+    "DECIMAL_PRECISION_EXCEEDS_MAX_PRECISION": (_fix_wide_literal_double,),
+    "EXCEED_LIMIT_LENGTH": (_fix_truncate_charvarchar,),
+    "DATATYPE_MISMATCH.BINARY_OP_DIFF_TYPES": (_fix_binop_coercion,),
+    "DATATYPE_MISMATCH.SPECIFIED_WINDOW_FRAME_UNACCEPTED_TYPE": (
+        _fix_string_range_frame,
+    ),
+    "DATATYPE_MISMATCH.RANGE_FRAME_INVALID_TYPE": (_fix_time_range_frame,),
+    "INVALID_INLINE_TABLE": (_fix_inline_values,),
+    "UNSUPPORTED_OVERWRITE": (_fix_insert_overwrite_selfread,),
+}
+_MAX_RETRIES = 64  # fixes per statement: one per offending site
+
+
+def _run_sql(spark, sql: str, trace: list, index: int, args=None):
+    """spark.sql(sql), retrying the Hive-legal shapes Spark refuses.
+
+    On an error whose condition has `_RETRIES` entries, the first fix
+    that returns new text wins: it is logged to `trace` as (index,
+    condition, fix name) and the text is re-issued. If that raises the
+    SAME condition again (the next offending site), the table is
+    consulted again; any other error propagates, as does the error no
+    fix changes."""
+    try:
+        return spark.sql(sql, args=args or None)
+    except Exception as e:
+        err = e
+    cond = _condition(err)
+    if cond is None:
         raise err
-    return spark.sql(f"{m.group(1)}AS {fixed}")
+    fixes = _RETRIES.get(cond, ()) + (
+        _RETRIES.get(cond.split(".")[0], ()) if "." in cond else ()
+    )
+    for _ in range(_MAX_RETRIES):
+        for fix in fixes:
+            out = fix(spark, sql, err)
+            if out is not None and out != sql:
+                break
+        else:
+            raise err
+        trace.append((index, cond, fix.__name__.removeprefix("_fix_")))
+        if not isinstance(out, str):
+            return out  # a fix that had to run the statement itself
+        try:
+            return spark.sql(out, args=args or None)
+        except Exception as e:
+            if _condition(e) != cond:
+                raise
+            sql, err = out, e
+    raise err
+
 
 
 def _select_item_positions(spark, body: str):
@@ -5432,19 +5619,24 @@ def _cast_to_declared(df, col: str, typ: str):
     return F.expr(_positional_cast_expr(f"`{f0.name}`", f0.dataType, dst))
 
 
-def _bucket_spec(spark: SparkSession, table: str):
-    """(numBuckets, bucketCols, sortCols) from DESCRIBE FORMATTED, or
-    None for an unbucketed table."""
+def _describe_formatted(spark: SparkSession, table: str) -> dict[str, str]:
+    """DESCRIBE FORMATTED as {col_name: data_type}; empty when the
+    catalog has no such table (a path-registered DML target)."""
     try:
         rows = spark.sql(
             f"DESCRIBE FORMATTED `{table.replace('.', '`.`')}`"
         ).collect()
     except Exception:
-        return None
-    meta = {
+        return {}
+    return {
         (r.col_name or "").strip(): (r.data_type or "").strip()
         for r in rows
     }
+
+
+def _bucket_spec(meta: dict[str, str]):
+    """(numBuckets, bucketCols, sortCols) from a table's
+    _describe_formatted, or None for an unbucketed table."""
     try:
         n = int(meta.get("Num Buckets", ""))
     except ValueError:
@@ -5469,7 +5661,7 @@ def _bucket_spec(spark: SparkSession, table: str):
 def _rewrite_table_inplace(spark: SparkSession, table: str, out) -> None:
     """Two-phase CoW swap: stage `out` to parquet, drop + recreate the
     table from the stage (MoveTask-style, same staging idea as
-    _retry_insert_overwrite_selfread), preserving partition columns and
+    _fix_insert_overwrite_selfread), preserving partition columns and
     bucketing (plain files under a bucketed catalog entry make later
     reads die INVALID_BUCKET_FILE)."""
     import shutil
@@ -5479,7 +5671,7 @@ def _rewrite_table_inplace(spark: SparkSession, table: str, out) -> None:
     part_cols = [
         c.name for c in spark.catalog.listColumns(table) if c.isPartition
     ]
-    bucket = _bucket_spec(spark, table)
+    bucket = _bucket_spec(_describe_formatted(spark, table))
     tq = table.replace(".", "`.`")
     # Hive keeps a partition in the metastore even when DML empties it
     # (only rows are deleted) — remember the registered partitions so
@@ -5804,6 +5996,8 @@ class ScriptResult:
     skipped: list[str] = field(default_factory=list)  # no-op'd statements
     prepared: dict[str, str] = field(default_factory=dict)
     txn: object | None = None  # open hive_spark.txn.Transaction, if any
+    # (statement index, Spark error condition, fix) per retry that fired
+    retries: list[tuple[int, str, str]] = field(default_factory=list)
 
 
 # --- materialized views in SQL text (ref: ql/.../parse/
@@ -6615,6 +6809,42 @@ def _parse_literals(spark: SparkSession, csv: str) -> list:
     return list(row)
 
 
+def _buffer_rows(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """CliDriver semantics: each statement's rows are buffered to the
+    client BEFORE the next statement runs (ref: ql/.../exec/
+    ListSinkOperator.java) — so a later DROP of a source table cannot
+    invalidate an earlier result (qtests routinely SELECT then DROP).
+    Materialize into a local-relation DataFrame with the same schema."""
+    try:
+        return spark.createDataFrame(df.collect(), df.schema)
+    except (ValueError, OverflowError) as e:
+        # timestamps past Python's datetime range (year > 9999) and
+        # proleptic year-0 dates (mask date branch) precede ordinal 1
+        if "out of range" not in str(e) and "ordinal must be" not in str(e):
+            raise
+    except Exception as e:
+        # year-month intervals: PySpark has no Python type for them
+        if _condition(e) != "NOT_IMPLEMENTED":
+            raise
+    # Hive prints both verbatim; buffer those columns as their string
+    # rendering instead
+    from pyspark.sql import functions as F
+
+    # rename POSITIONALLY first: result frames can carry duplicate
+    # auto-generated names (two casts of the same column), which any
+    # by-name reference refuses
+    tmp = df.toDF(*[f"_qc{i}" for i in range(len(df.columns))])
+    safe = tmp.select(*[
+        (
+            F.col(f"_qc{i}").cast("string")
+            if t.startswith(("timestamp", "date", "interval"))
+            else F.col(f"_qc{i}")
+        ).alias(c)
+        for i, (c, t) in enumerate(df.dtypes)
+    ])
+    return spark.createDataFrame(safe.collect(), safe.schema)
+
+
 def run_script(spark: SparkSession, text: str) -> ScriptResult:
     from hive_spark.operators import ensure_engine
 
@@ -6635,7 +6865,7 @@ def run_script(spark: SparkSession, text: str) -> ScriptResult:
 
         res.set_commands.update(_jh.database_vars(text, spark))
     try:
-        for stmt in split_statements(text):
+        for index, stmt in enumerate(split_statements(text)):
             stmt = _substitute_vars(stmt, res)
             # privilege enforcement FIRST (no-op unless
             # hive.security.authorization.enabled=true), before ANY
@@ -6738,17 +6968,12 @@ def run_script(spark: SparkSession, text: str) -> ScriptResult:
                 if name not in res.prepared:
                     raise ValueError(f"EXECUTE of unknown prepared statement {name!r}")
                 args = _parse_literals(spark, m.group(2)) if m.group(2) else []
-                _ptext = rewrite_statement(spark, res.prepared[name])
-                try:
-                    df = spark.sql(_ptext, args=args or None)
-                except Exception as e:
-                    if "BINARY_OP_DIFF_TYPES" not in str(e):
-                        raise
-                    df = _retry_binop_coercion(spark, _ptext, e, args=args)
+                df = _run_sql(
+                    spark, rewrite_statement(spark, res.prepared[name]),
+                    res.retries, index, args=args,
+                )
                 if df.columns:
-                    res.results.append(
-                        spark.createDataFrame(df.collect(), df.schema)
-                    )
+                    res.results.append(_buffer_rows(spark, df))
                 continue
             m = re.match(
                 r"^\s*SHOW\s+LOCKS(?:\s+(?:DATABASE\s+)?`?([\w.]+)`?)?"
@@ -7747,250 +7972,7 @@ def run_script(spark: SparkSession, text: str) -> ScriptResult:
                     "spark.sql.sources.partitionOverwriteMode", "dynamic"
                 )
             try:
-                df = spark.sql(rewritten)
-            except Exception as e:
-                # Hive-legal shapes Spark initially refuses: unaliased
-                # view expression columns, and self-read INSERT OVERWRITE
-                if "WITHOUT_ALIAS" in str(e) or (
-                    "COLUMN_ALREADY_EXISTS" in str(e)
-                    and _CREATE_VIEW.match(rewritten)
-                ):
-                    # duplicate unaliased literals ('12', '12', ...)
-                    # surface as COLUMN_ALREADY_EXISTS before the
-                    # without-alias check — same _c<i> fix applies
-                    df = _retry_view_autoalias(spark, rewritten, e)
-                elif "INVALID_TEMP_OBJ_REFERENCE" in str(e) and re.match(
-                    r"(?i)\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\b", rewritten
-                ):
-                    # a persistent view over a handler-backed temp view:
-                    # Hive stores it in the metastore; the session-lived
-                    # temp analog preserves every read that follows
-                    df = spark.sql(re.sub(
-                        r"(?i)^(\s*CREATE\s+(?:OR\s+REPLACE\s+)?)VIEW\b",
-                        r"\1TEMPORARY VIEW",
-                        rewritten,
-                    ))
-                elif (
-                    "DATATYPE_MISMATCH" in str(e)
-                    and "named_struct" in str(e)
-                    and _rewrite_tuple_in(rewritten) != rewritten
-                ):
-                    df = spark.sql(_rewrite_tuple_in(rewritten))
-                elif "DATA_DIFF_TYPES" in str(e) and re.search(
-                    r'"(greatest|least|array|coalesce)\(', str(e)
-                ):
-                    # Hive coerces mixed-category args to the STRING
-                    # common category (FunctionRegistry
-                    # getCommonCategory); Spark refuses — cast every arg
-                    df = _retry_common_category(spark, rewritten, e)
-                elif (
-                    "UNEXPECTED_INPUT_TYPE" in str(e)
-                    and '"DOUBLE"' in str(e)
-                    and re.search(r'"TIMESTAMP[^"]*"', str(e))
-                ):
-                    # variance/stddev over timestamps: Hive casts the
-                    # key to fractional epoch seconds (PrimitiveObject
-                    # InspectorUtils double conversion)
-                    df = _retry_ts_numeric_agg(spark, rewritten, e)
-                elif "GROUP_BY_POS_AGGREGATE" in str(e) or (
-                    "GROUP_BY_POS_OUT_OF_RANGE" in str(e)
-                ):
-                    # Hive defaults hive.groupby.position.alias=false:
-                    # GROUP BY 1 is the LITERAL 1, not an ordinal
-                    prev_ord = spark.conf.get(
-                        "spark.sql.groupByOrdinal", "true"
-                    )
-                    spark.conf.set("spark.sql.groupByOrdinal", "false")
-                    try:
-                        df = spark.sql(rewritten)
-                    finally:
-                        spark.conf.set("spark.sql.groupByOrdinal", prev_ord)
-                elif "GROUPING_ID_COLUMN_MISMATCH" in str(e):
-                    # Hive permits grouping__id args in ANY order; fold
-                    # to the standard bit expression over grouping()
-                    fixed = _rewrite_calls(
-                        rewritten, "grouping_id",
-                        lambda a: (
-                            "CAST(("
-                            + " + ".join(
-                                f"grouping({x}) * {1 << (len(a) - 1 - i)}"
-                                for i, x in enumerate(a)
-                            )
-                            + ") AS BIGINT)"
-                        ) if a else None,
-                    )
-                    if fixed == rewritten:
-                        raise
-                    df = spark.sql(fixed)
-                elif "INVALID_ORDERING_TYPE" in str(e) and "sortorder" in \
-                        str(e):
-                    df = _retry_unorderable_orderby(spark, rewritten, e)
-                elif ("INVALID_ORDERING_TYPE" in str(e)
-                      and '"MAP<' in str(e)):
-                    df = _retry_map_comparison(spark, rewritten, e)
-                elif "UNSUPPORTED_GROUPING_EXPRESSION" in str(e):
-                    # grouping()/grouping_id() under a PLAIN group by:
-                    # every group is a base group, so Hive returns 0
-                    fixed = _rewrite_calls(
-                        stmt=rewritten, name="grouping(?:_id|__id)?",
-                        build=lambda a: "0",
-                    )
-                    if fixed == rewritten:
-                        raise
-                    df = spark.sql(fixed)
-                elif "ASSIGNMENT_ARITY_MISMATCH" in str(e):
-                    df = _retry_partial_cte_aliases(spark, rewritten, e)
-                elif "FILTER_NOT_BOOLEAN" in str(e):
-                    df = _retry_literal_filter(spark, rewritten, e)
-                elif ("LATERAL_COLUMN_ALIAS_IN_WINDOW" in str(e)
-                      or ("MISSING_AGGREGATION" in str(e)
-                          and re.search(r"(?i)\bOVER\s*\(", rewritten))):
-                    df = _retry_window_agg_alias(spark, rewritten, e)
-                elif ("UNRESOLVED_COLUMN" in str(e)
-                      and re.search(
-                          r"(?i)\b(ORDER\s+BY|HAVING)\b", rewritten)
-                      and re.search(
-                          r"(?i)\b(GROUPING\s+SETS|CUBE|ROLLUP)\b",
-                          rewritten)):
-                    df = _retry_orderby_hidden_grouping_col(
-                        spark, rewritten, e
-                    )
-                elif "DECIMAL_PRECISION_EXCEEDS_MAX_PRECISION" in str(e):
-                    # numeric literal wider than DECIMAL(38): Hive types
-                    # it DOUBLE (json_serde3.q 1e39-scale constants);
-                    # Spark errors at parse — demote just those literals
-                    fixed = re.sub(
-                        r"\b\d[\d.]*\b",
-                        lambda m2: (
-                            m2.group(0) + "D"
-                            if sum(c.isdigit() for c in m2.group(0)) > 38
-                            else m2.group(0)
-                        ),
-                        rewritten,
-                    )
-                    if fixed == rewritten:
-                        raise
-                    df = spark.sql(fixed)
-                elif (
-                    "UNEXPECTED_INPUT_TYPE" in str(e)
-                    and "INTERVAL" in str(e).upper()
-                    and re.search(
-                        r'"(year|month|day|hour|minute|second)\(', str(e)
-                    )
-                ):
-                    # Hive's year()/month()/…/second() accept INTERVAL
-                    # inputs (interval_udf.q; ref: udf/UDFYear etc. via
-                    # HiveIntervalYearMonth) — Spark wants EXTRACT; the
-                    # rewrite is type-safe for date/timestamp args too
-                    fixed = re.sub(
-                        r"(?i)\b(year|month|day|hour|minute|second)\s*"
-                        r"\(([^()]+)\)",
-                        lambda m2: (
-                            f"CAST(EXTRACT({m2.group(1).upper()} FROM"
-                            f" {m2.group(2)}) AS INT)"
-                        ),
-                        rewritten,
-                    )
-                    if fixed == rewritten:
-                        raise
-                    df = spark.sql(fixed)
-                elif "EXCEED_LIMIT_LENGTH" in str(e):
-                    df = _retry_insert_truncate_charvarchar(
-                        spark, rewritten, e
-                    )
-                elif "BINARY_OP_DIFF_TYPES" in str(e):
-                    df = _retry_binop_coercion(spark, rewritten, e)
-                elif "SPECIFIED_WINDOW_FRAME_UNACCEPTED_TYPE" in str(e):
-                    df = _retry_string_range_frame(spark, rewritten, e)
-                elif "RANGE_FRAME_INVALID_TYPE" in str(e) and re.search(
-                    r'"(TIMESTAMP|DATE)[^"]*"', str(e).upper()
-                ):
-                    # Hive's RANGE amounts over time keys are SECONDS
-                    # for timestamps / DAYS for dates (ref:
-                    # ValueBoundaryScanner Timestamp/DateValueBoundary
-                    # Scanner) — Spark wants interval literals
-                    unit = (
-                        "SECOND"
-                        if '"TIMESTAMP' in str(e).upper()
-                        else "DAY"
-                    )
-                    fixed = re.sub(
-                        r"(?i)\brange\s+between\s+(\d+)\s+"
-                        r"(preceding|following)\s+and\s+"
-                        r"(\d+\s+|current\s+)(preceding|following|row)",
-                        lambda m2: (
-                            f"RANGE BETWEEN INTERVAL '{m2.group(1)}'"
-                            f" {unit} {m2.group(2).upper()} AND "
-                            + (
-                                "CURRENT ROW"
-                                if m2.group(3).strip().upper() == "CURRENT"
-                                else (
-                                    f"INTERVAL '{m2.group(3).strip()}'"
-                                    f" {unit} {m2.group(4).upper()}"
-                                )
-                            )
-                        ),
-                        rewritten,
-                    )
-                    fixed = re.sub(
-                        r"(?i)\brange\s+between\s+current\s+row\s+and\s+"
-                        r"(\d+)\s+(preceding|following)",
-                        lambda m2: (
-                            "RANGE BETWEEN CURRENT ROW AND INTERVAL"
-                            f" '{m2.group(1)}' {unit} {m2.group(2).upper()}"
-                        ),
-                        fixed,
-                    )
-                    fixed = re.sub(
-                        r"(?i)\brange\s+between\s+unbounded\s+preceding"
-                        r"\s+and\s+(\d+)\s+(preceding|following)",
-                        lambda m2: (
-                            "RANGE BETWEEN UNBOUNDED PRECEDING AND "
-                            f"INTERVAL '{m2.group(1)}' {unit} "
-                            f"{m2.group(2).upper()}"
-                        ),
-                        fixed,
-                    )
-                    fixed = re.sub(
-                        r"(?i)\brange\s+between\s+(\d+)\s+"
-                        r"(preceding|following)\s+and\s+unbounded"
-                        r"\s+following",
-                        lambda m2: (
-                            f"RANGE BETWEEN INTERVAL '{m2.group(1)}' "
-                            f"{unit} {m2.group(2).upper()} AND "
-                            "UNBOUNDED FOLLOWING"
-                        ),
-                        fixed,
-                    )
-                    # Hive frame shorthand: `range N preceding` =
-                    # BETWEEN N PRECEDING AND CURRENT ROW
-                    fixed = re.sub(
-                        r"(?i)\brange\s+(\d+)\s+preceding(?!\s+and\b)",
-                        lambda m2: (
-                            f"RANGE BETWEEN INTERVAL '{m2.group(1)}' "
-                            f"{unit} PRECEDING AND CURRENT ROW"
-                        ),
-                        fixed,
-                    )
-                    if fixed == rewritten:
-                        raise
-                    df = spark.sql(fixed)
-                elif "INLINE_TABLE" in str(e):
-                    df = _retry_inline_values(spark, rewritten, e)
-                elif "COLUMN_ALREADY_EXISTS" in str(e) and re.match(
-                    r"(?i)\s*CREATE\s+(?:TEMPORARY\s+)?(?:EXTERNAL\s+)?"
-                    r"TABLE\b", rewritten
-                ):
-                    # CTAS whose select list repeats an unaliased
-                    # expression: Hive names them _c<i> (SemanticAnalyzer
-                    # autogen aliases); Spark reuses the expression text
-                    # and collides
-                    fixed = _autoalias_select_lists(rewritten)
-                    if fixed == rewritten:
-                        raise
-                    df = spark.sql(fixed)
-                else:
-                    df = _retry_insert_overwrite_selfread(spark, rewritten, e)
+                df = _run_sql(spark, rewritten, res.retries, index)
             finally:
                 if _prev_mode is not None:
                     spark.conf.set(
@@ -7998,48 +7980,7 @@ def run_script(spark: SparkSession, text: str) -> ScriptResult:
                         _prev_mode,
                     )
             if df.columns:  # statements with a result shape (SELECT/SHOW/...)
-                # CliDriver semantics: each statement's rows are buffered
-                # to the client BEFORE the next statement runs (ref:
-                # ql/.../exec/ListSinkOperator.java) — so a later DROP of
-                # a source table cannot invalidate an earlier result
-                # (qtests routinely SELECT then DROP). Materialize into a
-                # local-relation DataFrame with the same schema.
-                try:
-                    res.results.append(
-                        spark.createDataFrame(df.collect(), df.schema)
-                    )
-                except Exception as e:
-                    msg = str(e)
-                    retriable = (
-                        isinstance(e, (ValueError, OverflowError))
-                        and ("out of range" in msg
-                             # proleptic year-0 dates (mask date branch)
-                             # precede Python datetime's ordinal 1
-                             or "ordinal must be" in msg)
-                    ) or "NOT_IMPLEMENTED" in msg
-                    if not retriable:
-                        raise
-                    # Hive prints timestamps past Python's datetime range
-                    # (year > 9999) and year-month intervals verbatim;
-                    # Python's collect() can't hold either — buffer those
-                    # columns as their string rendering instead
-                    from pyspark.sql import functions as F
-
-                    # rename POSITIONALLY first: result frames can carry
-                    # duplicate auto-generated names (two casts of the
-                    # same column), which any by-name reference refuses
-                    tmp = df.toDF(*[f"_qc{i}" for i in range(len(df.columns))])
-                    safe = tmp.select(*[
-                        (
-                            F.col(f"_qc{i}").cast("string")
-                            if t.startswith(("timestamp", "date", "interval"))
-                            else F.col(f"_qc{i}")
-                        ).alias(c)
-                        for i, (c, t) in enumerate(df.dtypes)
-                    ])
-                    res.results.append(
-                        spark.createDataFrame(safe.collect(), safe.schema)
-                    )
+                res.results.append(_buffer_rows(spark, df))
     except BaseException:
         # A failing statement inside BEGIN..COMMIT must not strand the
         # transaction: roll back (releasing the write locks) and restore

@@ -573,28 +573,70 @@ def test_row_format_full_delimited_clauses(spark):
     assert [(r.k, r.nt, r.mx) for r in out.results[-1].collect()] == [(1, 2, 1)]
 
 
-def test_load_data_avro_and_empty_table_dml(spark):
+_DOCTORS = [
+    (6, "Colin", "Baker"), (3, "Jon", "Pertwee"), (4, "Tom", "Baker"),
+    (5, "Peter", "Davison"), (11, "Matt", "Smith"),
+    (1, "William", "Hartnell"), (7, "Sylvester", "McCoy"),
+    (8, "Paul", "McGann"), (2, "Patrick", "Troughton"),
+    (9, "Christopher", "Eccleston"), (10, "David", "Tennant"),
+]
+
+
+def _write_doctors_avro(path) -> None:
+    """The rows of Hive's data/files/doctors.avro as an uncompressed
+    Avro object container (magic, metadata map, sync marker, one block)."""
+    import json
+
+    def zlong(n: int) -> bytes:  # zigzag varint
+        n = (n << 1) ^ (n >> 63)
+        out = bytearray()
+        while n > 0x7F:
+            out.append((n & 0x7F) | 0x80)
+            n >>= 7
+        out.append(n)
+        return bytes(out)
+
+    def zbytes(b: bytes) -> bytes:
+        return zlong(len(b)) + b
+
+    schema = json.dumps({
+        "type": "record", "name": "doctors",
+        "namespace": "testing.hive.avro.serde",
+        "fields": [{"name": "number", "type": "int"},
+                   {"name": "first_name", "type": "string"},
+                   {"name": "last_name", "type": "string"}],
+    }).encode()
+    sync = bytes(range(16))
+    meta = (zlong(2) + zbytes(b"avro.schema") + zbytes(schema)
+            + zbytes(b"avro.codec") + zbytes(b"null") + zlong(0))
+    block = b"".join(
+        zlong(n) + zbytes(first.encode()) + zbytes(last.encode())
+        for n, first, last in _DOCTORS
+    )
+    with open(path, "wb") as f:
+        f.write(b"Obj\x01" + meta + sync + zlong(len(_DOCTORS))
+                + zlong(len(block)) + block + sync)
+
+
+def test_load_data_avro_and_empty_table_dml(spark, tmp_path):
     """LOAD DATA sniffs self-describing formats (avro via the pure-
     Python container reader — no spark-avro jar in this runtime), and
     CoW DML on a freshly-created empty table seeds schema instead of
     failing UNABLE_TO_INFER_SCHEMA."""
     from hive_spark.sources.avro_lite import ddl_schema, read_container
 
-    fields, rows = read_container(
-        "/root/reference/data/files/doctors.avro"
-    )
+    doctors = str(tmp_path / "doctors.avro")
+    _write_doctors_avro(doctors)
+    fields, rows = read_container(doctors)
     assert fields == ["number", "first_name", "last_name"]
     assert len(rows) == 11 and rows[0][0] == 6
-    assert "number` int" in ddl_schema(
-        "/root/reference/data/files/doctors.avro"
-    ).replace(" `", "`")
+    assert "number` int" in ddl_schema(doctors).replace(" `", "`")
 
     out = run_script(
         spark,
         "DROP TABLE IF EXISTS avro_doc;"
         " CREATE TABLE avro_doc (number int, first_name string) STORED AS AVRO;"
-        " LOAD DATA LOCAL INPATH '/root/reference/data/files/doctors.avro'"
-        "   INTO TABLE avro_doc;"
+        f" LOAD DATA LOCAL INPATH '{doctors}' INTO TABLE avro_doc;"
         " SELECT COUNT(*) AS n, MIN(number) AS lo FROM avro_doc;"
         " DROP TABLE avro_doc;",
     )
@@ -612,6 +654,64 @@ def test_load_data_avro_and_empty_table_dml(spark):
         " DROP TABLE empty_dml;",
     )
     assert [r.i for r in out.results[-1].collect()] == [7]
+
+
+def test_update_delete_keep_partitioned_catalog_table(spark):
+    """UPDATE/DELETE on a partitioned, unversioned catalog table rewrite
+    it through the catalog, keeping its partition directories (a flat
+    path-level rewrite left the table reading as empty). Hive keeps a
+    partition whose rows DELETE removed."""
+    from hive_spark.engine import Engine
+
+    out = Engine(spark).script(
+        "DROP TABLE IF EXISTS dml_part;"
+        " CREATE TABLE dml_part (id INT, v STRING) PARTITIONED BY (p STRING)"
+        "   STORED AS PARQUET;"
+        " INSERT INTO dml_part PARTITION (p='a') VALUES (1, 'x'), (2, 'y');"
+        " INSERT INTO dml_part PARTITION (p='b') VALUES (3, 'z');"
+        " UPDATE dml_part SET v = 'u' WHERE id = 2;"
+        " SELECT id, v, p FROM dml_part ORDER BY id;"
+        " DELETE FROM dml_part WHERE id = 3;"
+        " SELECT id, v, p FROM dml_part ORDER BY id;"
+        " SHOW PARTITIONS dml_part;"
+        " DROP TABLE dml_part;",
+    )
+    after_update, after_delete, parts = (
+        [tuple(r) for r in df.collect()] for df in out.results[-3:]
+    )
+    assert after_update == [(1, "x", "a"), (2, "u", "a"), (3, "z", "b")]
+    assert after_delete == [(1, "x", "a"), (2, "u", "a")]
+    assert parts == [("p=a",), ("p=b",)]
+
+
+def test_update_merge_keep_decimal_column_type(spark):
+    """`SET dec = dec + x` in UPDATE and MERGE stores the column's own
+    DECIMAL type (Hive store assignment); the widened sum used to be
+    written as-is, and the next read failed with
+    PARQUET_COLUMN_DATA_TYPE_MISMATCH."""
+    from decimal import Decimal
+
+    out = run_script(
+        spark,
+        "DROP TABLE IF EXISTS dml_dec;"
+        " CREATE TABLE dml_dec (id INT, amt DECIMAL(7,2)) STORED AS PARQUET;"
+        " INSERT INTO dml_dec VALUES (1, 10.50), (2, 20.25);"
+        " UPDATE dml_dec SET amt = amt + 1.5 WHERE id = 1;"
+        " SELECT id, amt FROM dml_dec ORDER BY id;"
+        " MERGE INTO dml_dec t USING (SELECT 2 AS id, 0.75 AS d"
+        "   UNION ALL SELECT 3, 5.10) s ON t.id = s.id"
+        "   WHEN MATCHED THEN UPDATE SET amt = t.amt + s.d"
+        "   WHEN NOT MATCHED THEN INSERT VALUES (s.id, s.d * 2);"
+        " SELECT id, amt FROM dml_dec ORDER BY id;"
+        " DROP TABLE dml_dec;",
+    )
+    after_update, after_merge = (
+        [tuple(r) for r in df.collect()] for df in out.results[-2:]
+    )
+    assert after_update == [(1, Decimal("12.00")), (2, Decimal("20.25"))]
+    assert after_merge == [
+        (1, Decimal("12.00")), (2, Decimal("21.00")), (3, Decimal("10.20")),
+    ]
 
 
 def test_load_data_complex_types_delimited(spark, tmp_path):
