@@ -36,9 +36,13 @@ Command mapping:
                             VERSIONED targets publish a new snapshot
                             version and participate in open
                             BEGIN/COMMIT/ROLLBACK transactions
-- ``ADD JAR/FILE``       -> recorded no-op (cluster-level concern)
-- ``!shell`` / ``dfs``   -> rejected (side effects a query engine
-                            should not silently run)
+- ``ADD JAR/FILE``       -> recorded no-op (cluster-level concern);
+                            ADD FILE also records the local path for
+                            TRANSFORM USING
+- ``dfs`` / ``!mkdir``,  -> `_do_dfs` on the local filesystem,
+  ``!rm|rmr|cp|mv|touch``   confined to /tmp and the qtest scratch
+                            root; any other ``!`` command raises
+- ``source <file>``      -> the file's statements run in this session
 - everything else        -> spark.sql(stmt); SELECT results returned
 
 Statement rewrites applied before spark.sql (the HiveQL-only surface):
@@ -84,6 +88,24 @@ error condition (``err.getCondition()``, e.g.
   propagates.
 Each fix that fires is logged in ``ScriptResult.retries`` as
 (statement index, condition, fix name).
+
+Statement dispatch (Hive's CommandProcessorFactory): `_STATEMENTS` is
+the ordered table of statement kinds the engine runs itself; the first
+entry whose pattern matches and whose handler does not decline handles
+the statement, and everything else goes to Spark through `_exec_sql`.
+To add a statement handler:
+- write ``_do_<name>(spark, res, m)``, where ``m`` is the entry's
+  pattern matched against the statement. It returns None (handled), a
+  DataFrame (the statement's result) or `_PASS` (declined: the next
+  entry is tried);
+- add ``(name, pattern, _do_<name>, explain)`` to `_STATEMENTS` at its
+  priority. ``explain`` is what EXPLAIN and EXPLAIN ANALYZE of the
+  statement render: `_DESCRIPTOR` (one "engine metadata operation"
+  row), `_STAGE_BLOCK` (the STAGE DEPENDENCIES block) or None (Spark
+  explains it);
+- pin a minimal script in tests/test_hqlscript_dispatch.py.
+Each statement is logged in ``ScriptResult.statements`` as (statement
+index, entry name or "sql").
 """
 
 from __future__ import annotations
@@ -93,6 +115,8 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from hive_spark import authz
 
 _TXN = re.compile(r"^\s*(START\s+TRANSACTION|BEGIN|COMMIT|ROLLBACK)\b", re.I)
 _UPDATE_STMT = re.compile(
@@ -170,7 +194,9 @@ _SCHED_DROP = re.compile(
     r"^\s*DROP\s+SCHEDULED\s+QUERY\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$", re.I
 )
 _SET = re.compile(r"^\s*SET\s+(?!ROLE\b)([^=;\s]+)\s*(?:=\s*(.*))?$", re.I | re.S)
-_ADD = re.compile(r"^\s*(ADD|DELETE)\s+(JAR|FILE|ARCHIVE)S?\b", re.I)
+_ADD = re.compile(
+    r"^\s*(ADD|DELETE)\s+(JAR|FILE|ARCHIVE)S?\b\s*(.*?)\s*$", re.I | re.S
+)
 
 # Hive statements that mutate PHYSICAL-layout or serde metadata with no
 # query-result semantics on the native store, plus legacy SQL-standard
@@ -302,20 +328,20 @@ def _substitute_vars(stmt: str, res) -> str:
     """Hive CLI variable substitution (ref: common/src/java/org/apache/
     hadoop/hive/conf/SystemVariables.java): ${hiveconf:k}, ${hivevar:k},
     ${system:k}, ${env:k}, and bare ${k} (hivevar namespace). Values come
-    from the script's own SET commands; unknown variables stay verbatim
-    so downstream errors name them."""
+    from the script's own SET commands, then the session's defaults;
+    unknown variables stay verbatim so downstream errors name them."""
     if "${" not in stmt:
         return stmt
+    sc = {**res.defaults, **res.set_commands}
 
     def sub(m: re.Match) -> str:
         ns, key = m.group(1), m.group(2)
         if ns == "env":
             return os.environ.get(key, m.group(0))
         if ns == "system":
-            return res.set_commands.get(
+            return sc.get(
                 f"system:{key}", _VAR_DEFAULTS.get(f"system:{key}", m.group(0))
             )
-        sc = res.set_commands
         for k in ((f"{ns}:{key}",) if ns else ()) + (
             key, f"hivevar:{key}", f"hiveconf:{key}",
         ):
@@ -328,7 +354,7 @@ def _substitute_vars(stmt: str, res) -> str:
     )
 
 
-def _exec_dfs(stmt: str, res) -> None:
+def _do_dfs(spark: SparkSession, res, m: re.Match) -> None:
     """CliDriver `dfs` commands on the local filesystem (the engine's
     storage): -mkdir/-rm/-rmr/-cp/-put/-mv/-touchz. Paths are confined
     to /tmp — a script asking for anything else is recorded as skipped,
@@ -336,7 +362,7 @@ def _exec_dfs(stmt: str, res) -> None:
     import shlex
     import shutil
 
-    args = shlex.split(_DFS.match(stmt).group(1))
+    args = shlex.split(m.group(1))
     flags = [a for a in args if a.startswith("-")]
     paths = [a for a in args if not a.startswith("-")]
 
@@ -384,7 +410,7 @@ def _exec_dfs(stmt: str, res) -> None:
 
     paths = [_resolve(p) for p in paths]
     if not flags:
-        res.skipped.append(stmt)
+        res.skipped.append(m.string)
         return
     op = flags[0]
     # writes/deletes confined to /tmp; copy SOURCES may read anywhere
@@ -406,7 +432,7 @@ def _exec_dfs(stmt: str, res) -> None:
             return False
 
     if any(not _inside_tmp(p) for p in guarded):
-        res.skipped.append(stmt)
+        res.skipped.append(m.string)
         return
     paths = [
         os.path.realpath(p) if p in guarded else p for p in paths
@@ -441,7 +467,7 @@ def _exec_dfs(stmt: str, res) -> None:
             os.makedirs(os.path.dirname(p), exist_ok=True)
             open(p, "a").close()
     else:
-        res.skipped.append(stmt)
+        res.skipped.append(m.string)
 
 
 def _escaped_at(text: str, i: int) -> bool:
@@ -1895,7 +1921,7 @@ def _sniff_file_format(path: str) -> str | None:
     return None
 
 
-def _exec_load_data(spark: SparkSession, m: re.Match) -> None:
+def _do_load_data(spark: SparkSession, res, m: re.Match) -> None:
     """SQL-text LOAD DATA: parse the delimited file with the table's
     remembered separator, cast by position to the table schema, append
     (or overwrite). ref: ql/.../parse/LoadSemanticAnalyzer.java."""
@@ -5998,6 +6024,12 @@ class ScriptResult:
     txn: object | None = None  # open hive_spark.txn.Transaction, if any
     # (statement index, Spark error condition, fix) per retry that fired
     retries: list[tuple[int, str, str]] = field(default_factory=list)
+    # (statement index, `_STATEMENTS` entry or "sql") per statement, in
+    # the order they finish: a `source` line follows its file's lines
+    statements: list[tuple[int, str]] = field(default_factory=list)
+    # variables the CLI session starts with (HiveConf, qtest system
+    # properties): SET overrides them, RESET keeps them
+    defaults: dict[str, str] = field(default_factory=dict)
 
 
 # --- materialized views in SQL text (ref: ql/.../parse/
@@ -6165,7 +6197,7 @@ def _exim_path(p: str) -> str:
     return p
 
 
-def _exec_export(spark: SparkSession, m: re.Match) -> None:
+def _do_export(spark: SparkSession, res, m: re.Match) -> None:
     import shutil
 
     from hive_spark import ddl
@@ -6190,7 +6222,7 @@ def _exec_export(spark: SparkSession, m: re.Match) -> None:
                         dirs.remove(d)
 
 
-def _exec_import(spark: SparkSession, m: re.Match) -> None:
+def _do_import(spark: SparkSession, res, m: re.Match) -> None:
     import json
 
     from hive_spark import ddl
@@ -6255,7 +6287,7 @@ CONSTRAINTS: dict[int, object] = {}  # id(spark) -> ddl.ConstraintRegistry
 _CONSTRAINT_NAMES: dict[int, dict[str, object]] = {}
 
 
-def _exec_add_constraint(spark: SparkSession, m: re.Match) -> None:
+def _do_add_constraint(spark: SparkSession, res, m: re.Match) -> None:
     from hive_spark.ddl import Constraint, ConstraintRegistry
 
     table, cname, kind_txt, inner, tail = m.groups()
@@ -6299,8 +6331,7 @@ _CREATE_EXT_TEXT = re.compile(
 )
 
 
-def _exec_create_external_complex_text(spark: SparkSession,
-                                       m: re.Match) -> bool:
+def _do_create_external_text(spark: SparkSession, res, m: re.Match):
     """EXTERNAL delimited-text table with complex-typed columns: Spark's
     csv source can't hold array/map/struct (UNSUPPORTED_DATA_TYPE_FOR_
     DATASOURCE), but LazySimpleSerDe reads them from nested separators
@@ -6315,7 +6346,7 @@ def _exec_create_external_complex_text(spark: SparkSession,
     for item in _split_generic_args(col_text):
         toks = item.strip().split(None, 1)
         if len(toks) != 2:
-            return False
+            return _PASS
         typ = re.sub(r"(?i)\s+COMMENT\s+'[^']*'", "", toks[1]).strip()
         if re.search(r"(?i)\bUNIONTYPE\s*<", typ):
             typ = _rewrite_uniontype(typ)  # tagged-struct emulation
@@ -6324,7 +6355,7 @@ def _exec_create_external_complex_text(spark: SparkSession,
         re.match(r"(?i)\s*(array|map|struct|uniontype)\s*<", t)
         for _, t in specs
     ):
-        return False  # primitives only: the csv-table path handles it
+        return _PASS  # primitives only: the csv-table path handles it
     sep = "\x01"
     coll, mk = "\x02", "\x03"
     fm = re.search(
@@ -6363,7 +6394,6 @@ def _exec_create_external_complex_text(spark: SparkSession,
         else:
             cols.append(F.col(raw.columns[i]).cast(dt).alias(cname))
     raw.select(*cols).createOrReplaceTempView(name.split(".")[-1])
-    return True
 
 
 _INSERT_DIR = re.compile(
@@ -6440,7 +6470,7 @@ def _exec_explain_special(spark: SparkSession, mode: str, body: str):
     return spark.createDataFrame(rows, "section string, value string")
 
 
-def _exec_insert_directory(spark: SparkSession, m: re.Match):
+def _do_insert_directory(spark: SparkSession, res, m: re.Match):
     """INSERT OVERWRITE [LOCAL] DIRECTORY (ref: ql/.../parse/
     SemanticAnalyzer genFileSinkPlan): runs the query and writes the
     rows under the directory — text with Hive's delimiter/\\N null
@@ -6792,8 +6822,8 @@ def _macro_fold(params: list[str], body: str):
         return f"({out})"
 
     return fold
-# EXPLAIN ANALYZE <query> (Hive ExplainSemanticAnalyzer `analyze` mode):
-# re-executes the query and prints actual per-operator row counts
+
+
 # EXPLAIN ANALYZE <query> runs the query for actual row counts — but
 # `EXPLAIN ANALYZE TABLE ...` is EXPLAIN of an ANALYZE statement
 _EXPLAIN_ANALYZE = re.compile(
@@ -6845,6 +6875,1070 @@ def _buffer_rows(spark: SparkSession, df: DataFrame) -> DataFrame:
     return spark.createDataFrame(safe.collect(), safe.schema)
 
 
+# --- statement handlers: one `_do_<name>(spark, res, m)` per
+# `_STATEMENTS` entry. `m` is the entry's pattern matched against the
+# statement (`m.string`). A handler returns None (handled), a DataFrame
+# (the statement's result) or `_PASS` (declined); a side step returns
+# the statement rewritten for the entries after it.
+_PASS = object()
+
+
+def _do_create_macro(spark, res, m):
+    name, sig, body = m.group(1).lower(), m.group(2), m.group(3)
+    params = [p.strip().split()[0] for p in sig.split(",") if p.strip()]
+    _MACROS.setdefault(id(spark), {})[name] = (params, body.strip())
+
+
+def _do_drop_macro(spark, res, m):
+    _MACROS.get(id(spark), {}).pop(m.group(1).lower(), None)
+
+
+def _do_prepare(spark, res, m):
+    res.prepared[m.group(1).lower()] = m.group(2).strip()
+
+
+_EXPLAIN = re.compile(r"^\s*EXPLAIN\s+([\s\S]*)$", re.I)
+# explain-mode tokens: EXPLAIN CBO/COST/FORMATTED/... of an engine
+# statement still renders that statement's own explain output
+_EXPLAIN_MODE = re.compile(
+    r"(?i)^\s*(?:CBO|COST|JOINCOST|FORMATTED|EXTENDED|CODEGEN|LOGICAL|AST"
+    r"|DETAIL|REOPTIMIZATION|VECTORIZATION|ONLY|SUMMARY|OPERATOR|EXPRESSION"
+    r"|DEBUG|ANALYZE(?!\s+TABLE\b))\s+"
+)
+# Hive's EXPLAIN ANALYZE profiles the plan of a statement with side
+# effects but does NOT commit the effect — explainanalyze_1.q re-creates
+# the same table for real right after
+_SIDE_EFFECT = re.compile(
+    r"(?i)\s*(CREATE|DROP|ALTER|INSERT|LOAD|TRUNCATE|GRANT|REVOKE|SHOW|USE"
+    r"|DESC|DESCRIBE|ANALYZE|MSCK|SET|EXPORT|IMPORT)\b"
+)
+# what EXPLAIN of a statement the engine runs itself renders (Hive
+# prints a task tree; Spark has no plan for these)
+_DESCRIPTOR = "descriptor"  # one row: "engine metadata operation: KIND ..."
+_STAGE_BLOCK = "stages"  # the metadata-op STAGE block of Hive's DDL tasks
+
+
+def _do_explain(spark, res, m):
+    special = _EXPLAIN_SPECIAL.match(m.string)
+    if special:
+        return _exec_explain_special(spark, special.group(1), special.group(2))
+    from hive_spark.plans import explain_analyze
+
+    inner = m.group(1)
+    while (stripped := _EXPLAIN_MODE.sub("", inner, count=1)) != inner:
+        inner = stripped
+    analyze = _EXPLAIN_ANALYZE.match(m.string)
+    side = analyze and _SIDE_EFFECT.match(inner)
+    if side:
+        # plan only: explain the defining query when there is one, never
+        # execute the command (CTAS / CREATE VIEW AS: the query starts
+        # after the defining AS — a bare SELECT search would capture an
+        # unbalanced WITH-body fragment)
+        kind = side.group(1).upper()
+        sel = None
+        if kind == "CREATE":
+            sel = re.search(r"(?is)\bAS\s+((?:WITH|SELECT)\b.*)$", inner)
+        elif kind == "INSERT":
+            sel = re.search(r"(?is)\b((?:WITH|SELECT)\b.*)$", inner)
+        plan = f"side-effect statement ({kind}): plan only"
+        if sel:
+            plan = explain_analyze(
+                spark.sql(rewrite_statement(spark, sel.group(1)))
+            )
+        return spark.createDataFrame([(plan,)], "plan string")
+    how = next((e.explain for e in _STATEMENTS if e.pattern.match(inner)), None)
+    if how == _STAGE_BLOCK:
+        return spark.createDataFrame(
+            [("STAGE DEPENDENCIES:",), ("  Stage-0 is a root stage",)],
+            "Explain string",
+        )
+    if how == _DESCRIPTOR:
+        return spark.createDataFrame(
+            [(f"engine metadata operation: {inner.split()[0].upper()} ...",)],
+            "plan string",
+        )
+    if analyze:
+        plan = explain_analyze(spark.sql(rewrite_statement(spark, inner)))
+        return spark.createDataFrame([(plan,)], "plan string")
+    return _PASS
+
+
+def _do_execute(spark, res, m):
+    name = m.group(1).lower()
+    if name not in res.prepared:
+        raise ValueError(f"EXECUTE of unknown prepared statement {name!r}")
+    args = _parse_literals(spark, m.group(2)) if m.group(2) else []
+    df = _run_sql(
+        spark, rewrite_statement(spark, res.prepared[name]),
+        res.retries, len(res.statements), args=args,
+    )
+    return _buffer_rows(spark, df) if df.columns else None
+
+
+_SHOW_LOCKS = re.compile(
+    r"^\s*SHOW\s+LOCKS(?:\s+(?:DATABASE\s+)?`?([\w.]+)`?)?"
+    r"(?:\s+PARTITION\s*\([^)]*\))?(?:\s+EXTENDED)?\s*$",
+    re.I,
+)
+
+
+def _do_show_locks(spark, res, m):
+    from hive_spark.txn import list_locks
+
+    wanted = (m.group(1) or "").split(".")[-1].lower()
+    rows = list_locks({
+        k: v for k, v in VERSIONED_TABLES.items()
+        if not wanted or k.lower() == wanted
+    })
+    lock_rows = [
+        (r["table"], r["path"], r["holder_pid"], r["holder_alive"])
+        for r in rows
+    ]
+    # explicit LOCK TABLE/DATABASE session locks
+    for key, mode in sorted(_EXPLICIT_LOCKS.get(id(spark), {}).items()):
+        name = key.split(":", 1)[1]
+        if not wanted or name.split(".")[-1] == wanted:
+            lock_rows.append((name, mode, os.getpid(), True))
+    return spark.createDataFrame(
+        lock_rows,
+        "table string, path string, holder_pid int, holder_alive boolean",
+    )
+
+
+def _do_create_scheduled_query(spark, res, m):
+    from hive_spark.scheduled import ScheduledQueryRegistry
+
+    ScheduledQueryRegistry(spark).create(
+        m.group(2), m.group(3), m.group(4), replace=bool(m.group(1))
+    )
+
+
+def _do_alter_scheduled_query(spark, res, m):
+    from hive_spark.scheduled import ScheduledQueryRegistry
+
+    reg = ScheduledQueryRegistry(spark)
+    verb = m.group(2).upper()
+    if verb.startswith("ENABLE"):
+        reg.set_enabled(m.group(1), True)
+    elif verb.startswith("DISABLE"):
+        reg.set_enabled(m.group(1), False)
+    else:  # EXECUTE — run now, surface its results
+        res.results.extend(reg.execute(m.group(1)).results)
+
+
+def _do_drop_scheduled_query(spark, res, m):
+    from hive_spark.scheduled import ScheduledQueryRegistry
+
+    ScheduledQueryRegistry(spark).drop(m.group(1))
+
+
+_SOURCE = re.compile(r"^\s*source\s+(\S+)\s*;?\s*$", re.I)
+
+
+def _do_source(spark, res, m):
+    # CliDriver `source <file>`: the file's statements run in this
+    # session, against this script's variables, results and traces
+    path = m.group(1)
+    if not os.path.isabs(path) or not os.path.exists(path):
+        for base in LOAD_DATA_BASES:
+            cand = os.path.normpath(os.path.join(base, path))
+            if os.path.exists(cand):
+                path = cand
+                break
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"source: {m.group(1)}")
+    with open(path) as f:
+        _run_statements(spark, res, f.read())
+
+
+_RENAME_TABLE = re.compile(
+    r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+RENAME\s+TO\s+`?([\w.]+)`?\s*$", re.I
+)
+_RENAME_VIEW = re.compile(
+    r"^\s*ALTER\s+VIEW\s+`?([\w.]+)`?\s+RENAME\s+TO\s+`?([\w.]+)`?\s*$", re.I
+)
+
+
+def _cross_database(spark, src: str, dst: str) -> bool:
+    if "." not in src + dst:
+        return False
+    cur = spark.catalog.currentDatabase()
+    sdb, ddb = (n.rsplit(".", 1)[0] if "." in n else cur for n in (src, dst))
+    return sdb.lower() != ddb.lower()
+
+
+def _do_rename_table(spark, res, m):
+    # cross-database RENAME (Hive moves the metastore entry; Spark
+    # refuses) -> CoW move; within one database Spark renames
+    src, dst = m.groups()
+    if not _cross_database(spark, src, dst):
+        return _PASS
+    parts = [c.name for c in spark.catalog.listColumns(src) if c.isPartition]
+    w = spark.table(src).write
+    if parts:
+        w = w.partitionBy(*parts)
+    w.saveAsTable(dst)
+    spark.sql(f"DROP TABLE `{src.replace('.', '`.`')}`")
+
+
+def _do_rename_view(spark, res, m):
+    # cross-database view RENAME (alter_view_rename.q): Hive re-homes
+    # the metastore entry; Spark refuses — recreate from the stored view
+    # text, then drop
+    src, dst = m.groups()
+    if not _cross_database(spark, src, dst):
+        return _PASS
+    vtext = next(
+        (r.data_type
+         for r in spark.sql(f"DESCRIBE TABLE EXTENDED {src}").collect()
+         if r.col_name == "View Text"),
+        None,
+    )
+    if vtext is None:
+        raise ValueError(f"{src} is not a view")
+    spark.sql(f"CREATE VIEW {dst} AS {vtext}")
+    spark.sql(f"DROP VIEW {src}")
+
+
+_CREATE_LIKE_FILE = re.compile(
+    r"(?i)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
+    r"(IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s+LIKE\s+FILE\s+"
+    r"(PARQUET|ORC)\s+'([^']+)'\s*"
+    r"(?:PARTITIONED\s+BY\s*\(([^)]*)\))?\s*$"
+)
+
+
+def _do_create_table_like_file(spark, res, m):
+    # CREATE TABLE ... LIKE FILE <fmt> '<path>' (HIVE-26395, ref:
+    # ql/.../ddl/table/create/like/): derive the schema by reading the
+    # file's footer. Hive names data files 000000_0; this engine writes
+    # part-*.snappy.* — fall back to any data file in the same directory.
+    ine, name, fmt, fpath, parts = m.groups()
+    fpath = re.sub(r"^(?:file|pfile|hdfs):/+", "/", fpath)
+    if not os.path.exists(fpath):
+        d = os.path.dirname(fpath)
+        cands = [
+            os.path.join(d, f)
+            for f in (os.listdir(d) if os.path.isdir(d) else [])
+            if not f.startswith(("_", "."))
+        ]
+        if not cands:
+            raise FileNotFoundError(fpath)
+        fpath = sorted(cands)[0]
+    ddl = spark.read.format(fmt.lower()).load(fpath).schema.toDDL()
+    pclause = f" PARTITIONED BY ({parts})" if parts else ""
+    spark.sql(
+        f"CREATE TABLE {'IF NOT EXISTS ' if ine else ''}"
+        f"`{name.replace('.', '`.`')}` ({ddl})"
+        f" USING {fmt.lower()}{pclause}"
+    )
+
+
+_DROP_PARTITION = re.compile(
+    r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+DROP\s+(IF\s+EXISTS\s+)?"
+    r"((?:PARTITION\s*\((?:[^()]|\([^()]*\))*\)\s*,?\s*)+)(?:PURGE\s*)?$",
+    re.I,
+)
+
+
+def _do_drop_partition(spark, res, m):
+    table, if_exists = m.group(1), m.group(2)
+    specs = re.findall(
+        r"PARTITION\s*\(((?:[^()]|\([^()]*\))*)\)", m.group(3), re.I
+    )
+    if len(specs) == 1:
+        # single spec: the helper expands Hive partial/comparator forms;
+        # a full equality spec falls through to Spark
+        done = _drop_partial_partitions(
+            spark, table, specs[0], if_exists=bool(if_exists)
+        )
+        return None if done else _PASS
+    # Hive allows DROP PARTITION (...), PARTITION (...) (AlterTableDrop-
+    # PartitionAnalyzer: one desc per spec); Spark parses only one
+    # clause — expand each
+    for sp in specs:
+        if not _drop_partial_partitions(
+            spark, table, sp, if_exists=bool(if_exists)
+        ):
+            spark.sql(
+                f"ALTER TABLE `{table.replace('.', '`.`')}` DROP "
+                f"{if_exists or ''}PARTITION ({sp})"
+            )
+
+
+def _do_exchange_partition(spark, res, m):
+    # EXCHANGE PARTITION (ref: ql/.../ddl/table/partition/exchange/
+    # AlterTableExchangePartitionAnalyzer.java): the partition MOVES
+    # source -> destination
+    dst, spec, src = m.groups()
+    cond = " AND ".join(
+        "`{}` = {}".format(
+            k.strip().strip("`"),
+            v.strip() if v.strip()[:1] in "'\"" else "'" + v.strip() + "'",
+        )
+        for k, v in (kv.split("=", 1) for kv in spec.split(","))
+    )
+    spark.table(src).where(cond).write.insertInto(dst, overwrite=False)
+    spark.sql(
+        f"ALTER TABLE `{src.replace('.', '`.`')}` "
+        f"DROP IF EXISTS PARTITION ({spec})"
+    )
+
+
+_DROP_CONSTRAINT = re.compile(
+    r"^\s*ALTER\s+TABLE\s+[\w.`]+\s+DROP\s+CONSTRAINT\s+`?(\w+)`?\s*$", re.I
+)
+
+
+def _do_drop_constraint(spark, res, m):
+    c = _CONSTRAINT_NAMES.get(id(spark), {}).pop(m.group(1).lower(), None)
+    reg = CONSTRAINTS.get(id(spark))
+    if reg is not None and c is not None:
+        reg.constraints = [x for x in reg.constraints if x is not c]
+
+
+_BANG = re.compile(r"^\s*!\s*(mkdir|rm|rmr|cp|mv|touchz?)\s+(.*)$", re.I | re.S)
+
+
+def _do_bang(spark, res, m):
+    # CliDriver `!<cmd>`: the confined local-file subset maps onto the
+    # dfs executor (same scratch guard); any other `!` command raises
+    op = {"touch": "touchz"}.get(m.group(1).lower(), m.group(1))
+    _do_dfs(spark, res, _DFS.match(f"dfs -{op} {m.group(2)}"))
+
+
+def _do_shell(spark, res, m):
+    raise ValueError(
+        f"shell commands are not executed by the engine: {m.string[:60]!r}"
+    )
+
+
+def _do_transaction(spark, res, m):
+    from hive_spark.txn import Transaction
+
+    verb = re.sub(r"\s+", " ", m.group(1)).strip().upper()
+    if verb in ("BEGIN", "START TRANSACTION"):
+        if res.txn is not None and res.txn.active:
+            raise ValueError("transaction already open")
+        res.txn = Transaction(spark, dict(VERSIONED_TABLES)).begin()
+        # repeatable reads: pin every versioned table's view at the
+        # BEGIN version until COMMIT/ROLLBACK
+        for name in VERSIONED_TABLES:
+            if res.txn.pinned_version(name) is not None:
+                res.txn.read(name).createOrReplaceTempView(name)
+    elif res.txn is None or not res.txn.active:
+        raise ValueError(f"{verb} without an open transaction")
+    else:
+        if verb == "COMMIT":
+            res.txn.commit()
+        else:
+            res.txn.rollback()
+        _restore_latest_views(spark)
+
+
+_AUTHORIZATION = re.compile(
+    r"^\s*(?:(?:CREATE|DROP|SET)\s+ROLE|SHOW\s+(?:ROLES?|CURRENT\s+ROLES"
+    r"|PRINCIPALS|GRANT)|GRANT|REVOKE)\b",
+    re.I,
+)
+
+
+def _do_authorization(spark, res, m):
+    out = authz.handle(spark, m.string)
+    if out is None:
+        return _PASS
+    if out is not True and out.columns:
+        return spark.createDataFrame(out.collect(), out.schema)
+
+
+_CREATE_OWNED = re.compile(
+    r"^\s*CREATE\s+(?:(?:(?:EXTERNAL|TEMPORARY|TRANSACTIONAL|MANAGED)\s+)*"
+    r"TABLE|(?:OR\s+REPLACE\s+)?(?:MATERIALIZED\s+)?VIEW"
+    r"|(?:REMOTE\s+)?(DATABASE|SCHEMA))\s+(?:IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?",
+    re.I,
+)
+
+
+def _do_record_owner(spark, res, m):
+    # side step: the creator owns the object (SQLStd: ALTER/DROP of a
+    # DATABASE need it too); the statement itself runs further on
+    authz.record_owner(spark, m.group(2) + ("." if m.group(1) else ""))
+    return _PASS
+
+
+def _do_lock(spark, res, m):
+    kind, name, mode = m.groups()
+    _EXPLICIT_LOCKS.setdefault(id(spark), {})[
+        f"{kind.upper()}:{name.lower()}"
+    ] = mode.upper()
+
+
+def _do_unlock(spark, res, m):
+    kind, name = m.groups()
+    _EXPLICIT_LOCKS.get(id(spark), {}).pop(f"{kind.upper()}:{name.lower()}", None)
+
+
+def _do_compact(spark, res, m):
+    tbl, pspec, ctype = m.groups()
+    _COMPACTIONS.setdefault(id(spark), []).append(
+        (tbl.lower(), (pspec or "").strip(), ctype.lower(), "succeeded")
+    )
+
+
+def _do_view_partition(spark, res, m):
+    view, verb, specs_text = m.groups()
+    vparts = _VIEW_PARTS.setdefault(id(spark), {}).setdefault(view.lower(), [])
+    for sp in re.findall(r"PARTITION\s*\(([^)]*)\)", specs_text, re.I):
+        pname = _part_spec_to_name(sp)
+        if verb.upper() == "ADD" and pname not in vparts:
+            vparts.append(pname)
+        elif verb.upper() == "DROP" and pname in vparts:
+            vparts.remove(pname)
+
+
+_SHOW_PARTITIONS = re.compile(
+    r"^\s*SHOW\s+PARTITIONS\s+`?([\w.]+)`?"
+    r"(?:\s+PARTITION\s*\(([^)]*)\))?"
+    r"(?:\s+WHERE\s+([\s\S]*?))?"
+    r"(?:\s+ORDER\s+BY\s+([\s\S]*?))?"
+    r"(?:\s+LIMIT\s+(\d+))?\s*$",
+    re.I,
+)
+
+
+def _is_view(spark, name: str) -> bool:
+    if name.lower() in _VIEW_PARTS.get(id(spark), {}):
+        return True
+    try:
+        return spark.catalog.getTable(name).tableType == "VIEW"
+    except Exception:
+        return False
+
+
+def _do_show_partitions(spark, res, m):
+    from urllib.parse import unquote
+
+    tbl, spec, where, order, limit = m.groups()
+    if not (where or order or limit) and _is_view(spark, tbl):
+        names = _VIEW_PARTS.get(id(spark), {}).get(tbl.lower(), [])
+        if spec:
+            want = _part_spec_to_name(spec)
+            names = [p for p in names if want in p.split("/") or p == want]
+        return spark.createDataFrame([(p,) for p in names], "partition string")
+    if not (spec or where or order or limit):
+        return _PASS
+    # SHOW PARTITIONS ... [PARTITION(spec)] [WHERE] [ORDER BY] [LIMIT]
+    # (HIVE-22458 filtered listing, show_partitions2.q): evaluate over
+    # the partition list as string columns — numeric predicates coerce
+    # under non-ANSI comparison, and __HIVE_DEFAULT_PARTITION__ compares
+    # as its literal
+    raw = [
+        r[0] for r in spark.sql(
+            f"SHOW PARTITIONS `{tbl.replace('.', '`.`')}`"
+        ).collect()
+    ]
+    pnames = [c.name for c in spark.catalog.listColumns(tbl) if c.isPartition]
+    rows = [
+        tuple([unquote(kv.split("=", 1)[1]) for kv in r.split("/")] + [r])
+        for r in raw
+    ]
+    schema = ", ".join(f"`{n}` string" for n in pnames) + ", _raw string"
+    spark.createDataFrame(rows, schema).createOrReplaceTempView(
+        "_hqls_show_parts"
+    )
+    conds = []
+    for kv in (spec.split(",") if spec else []):
+        k, v = kv.split("=", 1)
+        conds.append(f"`{k.strip().strip('`')}` = {v.strip()}")
+    if where:
+        conds.append(f"({where})")
+    sql = "SELECT _raw AS `partition` FROM _hqls_show_parts"
+    if conds:
+        sql += " WHERE " + " AND ".join(conds)
+    if order:
+        sql += f" ORDER BY {order}"
+    if limit:
+        sql += f" LIMIT {limit}"
+    out = spark.sql(sql)
+    return spark.createDataFrame(out.collect(), out.schema)
+
+
+_SHOW_TABLE_EXTENDED_PART = re.compile(
+    r"^\s*(SHOW\s+TABLE\s+EXTENDED\s+LIKE\s+`?([\w.]+)`?)\s+"
+    r"PARTITION\s*\(([^)]*)\)\s*$",
+    re.I,
+)
+
+
+def _do_show_table_extended_view_partition(spark, res, m):
+    # metadata-only view partition: the table-level lines
+    if m.group(2).lower() not in _VIEW_PARTS.get(id(spark), {}):
+        return _PASS
+    return spark.sql(rewrite_statement(spark, m.group(1)))
+
+
+_DESCRIBE_PART = re.compile(
+    r"^\s*(DESCRIBE|DESC)\s+(FORMATTED\s+|EXTENDED\s+)?"
+    r"`?([\w.]+)`?\s+PARTITION\s*\([^)]*\)\s*$",
+    re.I,
+)
+
+
+def _do_describe_view_partition(spark, res, m):
+    # DESCRIBE view PARTITION(...): the view's columns (the partition is
+    # metadata-only)
+    if m.group(3).lower() not in _VIEW_PARTS.get(id(spark), {}):
+        return _PASS
+    return spark.sql(f"DESCRIBE {m.group(2) or ''}`{m.group(3)}`")
+
+
+_DESCRIBE_XPATH = re.compile(
+    r"^\s*(?:DESCRIBE|DESC)\s+`?([\w.]+)`?\s+(?=[\w.]*\$)"
+    r"([\w$]+(?:\.[\w$]+)+|\w+\.\$\w+\$)\s*$",
+    re.I,
+)
+
+
+def _do_describe_xpath(spark, res, m):
+    # DESCRIBE tbl col.$elem$/.$key$/.$value$[.field...] — Hive xpath-
+    # style type navigation (describe_xpath.q; ref: ql/.../exec/DDLTask
+    # describeTable with a nested column path). Walk the Spark schema
+    # the same way.
+    from pyspark.sql import types as T
+
+    schema = spark.table(m.group(1)).schema
+    toks = m.group(2).split(".")
+    dt = schema[[f.name.lower() for f in schema].index(toks[0].lower())].dataType
+    for tok in toks[1:]:
+        if tok == "$elem$":
+            dt = dt.elementType
+        elif tok == "$key$":
+            dt = dt.keyType
+        elif tok == "$value$":
+            dt = dt.valueType
+        else:
+            dt = dt[[f.name.lower() for f in dt.fields].index(tok.lower())].dataType
+    fields = (
+        [(f.name, f.dataType) for f in dt.fields]
+        if isinstance(dt, T.StructType) else [(toks[-1], dt)]
+    )
+    return spark.createDataFrame(
+        [(n, t.simpleString(), "from deserializer") for n, t in fields],
+        "col_name string, data_type string, comment string",
+    )
+
+
+# SHOW [SORTED] COLUMNS ... ['pattern'] (Hive ShowColumnsDesc: LIKE
+# keyword optional; *-glob with | alternation, case-insensitive, output
+# sorted — show_columns.q). Plain un-patterned SHOW COLUMNS is Spark's.
+_SHOW_COLUMNS = re.compile(
+    r"^(?=\s*SHOW\s+SORTED\b|[^'\"]*['\"])"
+    r"\s*SHOW\s+(?:SORTED\s+)?COLUMNS\s+(?:FROM|IN)\s+`?([\w.]+)`?"
+    r"(?:\s+(?:FROM|IN)\s+`?([\w]+)`?)?"
+    r"(?:\s+(?:LIKE\s+)?['\"]([^'\"]+)['\"])?\s*$",
+    re.I,
+)
+
+
+def _do_show_columns(spark, res, m):
+    tbl, db, pattern = m.groups()
+    rx = re.compile(".*")
+    if pattern:
+        rx = re.compile("|".join(
+            "^" + re.escape(p.replace("*", "%"))
+            .replace("%", ".*").replace("_", ".") + "$"
+            for p in pattern.split("|")
+        ), re.I)
+    names = sorted(
+        (c.name,)
+        for c in spark.catalog.listColumns(f"{db}.{tbl}" if db else tbl)
+        if rx.match(c.name)
+    )
+    return spark.createDataFrame(names, "col_name string")
+
+
+def _do_show_compactions(spark, res, m):
+    return spark.createDataFrame(
+        [
+            (str(i + 1), "default", t, p, c, s, "")
+            for i, (t, p, c, s) in enumerate(_COMPACTIONS.get(id(spark), []))
+        ],
+        "compactionid string, dbname string, tabname string,"
+        " partname string, type string, state string, workerid string",
+    )
+
+
+def _do_show_transactions(spark, res, m):
+    open_txns = []
+    if res.txn is not None and getattr(res.txn, "active", False):
+        open_txns.append((
+            str(getattr(res.txn, "txn_id", 1)), "OPEN",
+            authz.current_user(), "localhost",
+        ))
+    return spark.createDataFrame(
+        open_txns, "txnid string, state string, user string, host string"
+    )
+
+
+def _do_add_resource(spark, res, m):
+    # ADD FILE ships a script to executors (ref: ql/ SessionState
+    # add_resource); here the executor IS local, so record basename ->
+    # resolved path and let the TRANSFORM USING rewrite absolutize
+    # commands. JARs and archives are recorded no-ops.
+    if m.group(2).upper() == "FILE":
+        files = _ADDED_FILES.setdefault(id(spark), {})
+        for p in m.group(3).split():
+            base = os.path.basename(p.rstrip("/"))
+            if m.group(1).upper() == "DELETE":
+                files.pop(base, None)
+                continue
+            cand = p
+            hm = re.match(r"(?i)^hdfs:/+(.*)$", cand)
+            if hm:
+                # qtest "HDFS" absolute paths live under qtest scratch
+                # (same mapping as _do_dfs), except the /tmp/ subtree
+                # which stays host
+                rest = "/" + hm.group(1)
+                cand = (
+                    rest if rest.startswith("/tmp/")
+                    else os.path.normpath(QTEST_TMP + rest)
+                )
+            if not os.path.isabs(cand) or not os.path.exists(cand):
+                for b in LOAD_DATA_BASES:
+                    c2 = os.path.normpath(os.path.join(b, p))
+                    if os.path.exists(c2):
+                        cand = c2
+                        break
+            if os.path.exists(cand):
+                files[base] = os.path.abspath(cand)
+    res.skipped.append(m.string)
+
+
+def _do_metadata_noop(spark, res, m):
+    res.skipped.append(m.string)
+
+
+def _do_create_materialized_view(spark, res, m):
+    name, query = m.group(1), m.group(3)
+    sql = rewrite_statement(spark, query)
+    if not (re.search(r"(?i)IF\s+NOT\s+EXISTS", m.string)
+            and spark.catalog.tableExists(name)):
+        spark.sql(sql).write.mode("overwrite").saveAsTable(name)
+    _MV_DEFS.setdefault(id(spark), {})[name.lower()] = sql
+
+
+def _do_drop_materialized_view(spark, res, m):
+    spark.sql(f"DROP TABLE IF EXISTS `{m.group(1)}`")
+    _MV_DEFS.get(id(spark), {}).pop(m.group(1).lower(), None)
+
+
+def _do_show_materialized_views(spark, res, m):
+    return spark.createDataFrame(
+        [(n, "Yes", "Manual refresh") for n in sorted(_MV_DEFS.get(id(spark), {}))],
+        "mv_name string, rewrite_enabled string, mode string",
+    )
+
+
+def _do_rebuild_materialized_view(spark, res, m):
+    sql = _MV_DEFS.get(id(spark), {}).get(m.group(1).lower())
+    if sql is None:
+        raise ValueError(f"REBUILD of unknown materialized view {m.group(1)!r}")
+    spark.sql(sql).write.mode("overwrite").saveAsTable(m.group(1))
+
+
+# FROM <src> INSERT ... with DIRECTORY sinks mixed in: Spark runs the
+# TABLE multi-insert natively but refuses Hive-format DIRECTORY sinks
+_FROM_INSERT_DIRECTORY = re.compile(
+    r"(?is)^\s*FROM\s+([\s\S]*?)(?=INSERT\b)"
+    r"(?=[\s\S]*INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?DIRECTORY)(\bINSERT\b[\s\S]*)$"
+)
+
+
+def _do_from_insert_directory(spark, res, m):
+    # peel the DIRECTORY sinks off and run each through the directory
+    # writer (FROM-first SELECT keeps the shared source)
+    head, tail = m.groups()
+    starts = [s for s, _ in _top_level_spans(tail, r"\bINSERT\b")]
+    kept = []
+    for s, e in zip(starts, starts[1:] + [len(tail)]):
+        cl = tail[s:e].strip()
+        dm = _INSERT_DIR.match(cl)
+        if dm:
+            q = f"FROM {head} {dm.group(5)}"
+            _do_insert_directory(
+                spark, res, _INSERT_DIR.match(cl[: dm.start(5)] + q) or dm
+            )
+        else:
+            kept.append(cl)
+    if kept:
+        spark.sql(rewrite_statement(spark, f"FROM {head} " + " ".join(kept)))
+
+
+_UPDATE_COLUMNS = re.compile(
+    r"^\s*ALTER\s+TABLE\s+`?[\w.]+`?(?:\s+PARTITION\s*\([^)]*\))?"
+    r"\s+UPDATE\s+COLUMNS(?:\s+(?:CASCADE|RESTRICT))?\s*$",
+    re.I,
+)
+_ALTER_TABLE = re.compile(r"^\s*ALTER\s+TABLE\b", re.I)
+
+
+def _do_alter_columns(spark, res, m):
+    return None if _exec_alter_columns(spark, m.string) else _PASS
+
+
+# TRUNCATE TABLE t COLUMNS (c1, c2): Hive clears the named columns' data
+# (list-bucketing feature, ref: ql/.../ddl/table/misc/truncate) — CoW
+# null-out of those columns
+_TRUNCATE_COLUMNS = re.compile(
+    r"(?i)^\s*TRUNCATE\s+TABLE\s+`?([\w.]+)`?"
+    r"(?:\s+PARTITION\s*\([^)]*\))?\s+COLUMNS\s*\(([^)]*)\)\s*$"
+)
+
+
+def _do_truncate_columns(spark, res, m):
+    from pyspark.sql import functions as F
+
+    table = m.group(1)
+    cols = {c.strip().strip("`").lower() for c in m.group(2).split(",")}
+    df = spark.table(table)
+    _rewrite_table_inplace(spark, table, df.select(*[
+        F.lit(None).cast(t).alias(c) if c.lower() in cols else F.col(c)
+        for c, t in df.dtypes
+    ]))
+
+
+# SHOW CREATE DATABASE (Hive DDL Spark lacks): rebuild the statement
+# from the catalog's database metadata
+_SHOW_CREATE_DATABASE = re.compile(
+    r"(?i)^\s*SHOW\s+CREATE\s+(?:DATABASE|SCHEMA)\s+`?([\w]+)`?\s*$"
+)
+
+
+def _do_show_create_database(spark, res, m):
+    db = spark.catalog.getDatabase(m.group(1))
+    text = f"CREATE DATABASE `{db.name}`"
+    if db.description:
+        text += f"\nCOMMENT\n  '{db.description}'"
+    text += f"\nLOCATION\n  '{db.locationUri}'"
+    return spark.createDataFrame([(text,)], "createdb_stmt string")
+
+
+_RESET = re.compile(r"(?i)^\s*RESET(?:\s+(-d\s+)?([\w.\s$:]+?))?\s*$")
+
+
+def _do_reset(spark, res, m):
+    # Hive RESET / RESET -d key... (SetProcessor): drop the session
+    # overrides; Spark's RESET grammar rejects the -d flag and dotted
+    # hive keys. Bare RESET un-applies every key this script SET; the
+    # variables the session started with (`ScriptResult.defaults`) stay.
+    for key in (m.group(2) or "").split() or list(res.set_commands):
+        res.set_commands.pop(key, None)
+        try:
+            spark.sql(f"RESET `{key}`")
+        except Exception:
+            pass
+
+
+def _do_set(spark, res, m):
+    if m.group(2) is None:
+        return _PASS  # SET key: Spark echoes the value
+    key, val = m.group(1), m.group(2).strip()
+    res.set_commands[key] = val
+    # qtests set fs.default.name=invalidscheme:/// to prove metadata-only
+    # ops never touch the FS; Spark propagates session conf into the
+    # Hadoop conf of every file source, so applying it poisons all later
+    # reads in the session. This runtime is always local-FS — record,
+    # don't apply.
+    if key.lower() in ("fs.default.name", "fs.defaultfs"):
+        return None
+    try:
+        spark.conf.set(key, val)
+    except Exception:
+        pass  # hive-only knob: recorded above, nothing to set
+
+
+# DefaultStorageHandler is Hive's no-op handler — the table behaves
+# exactly like a managed table (ref: ql/.../metadata/
+# DefaultStorageHandler.java)
+_DEFAULT_STORAGE_HANDLER = re.compile(
+    r"(?is)^([\s\S]*?)\bSTORED\s+BY\s+'org\.apache\.hadoop\.hive\.ql\."
+    r"metadata\.DefaultStorageHandler'"
+    r"(?:\s+WITH\s+SERDEPROPERTIES\s*\((?:[^()]|\([^()]*\))*\))?"
+)
+
+
+def _do_default_storage_handler(spark, res, m):
+    # side step: strip the clause for every entry after this one
+    return m.group(1) + m.string[m.end():]
+
+
+_STORED_BY = re.compile(r"(?is)^(?=[\s\S]*?STORED\s+BY\b)")
+
+
+def _do_jdbc_table(spark, res, m):
+    from hive_spark.sources import jdbc_handler
+
+    return None if jdbc_handler.try_create_jdbc_table(spark, m.string) else _PASS
+
+
+_HANDLER_TABLE = re.compile(r"^\s*(?:INSERT|ALTER|DROP)\b", re.I)
+
+
+def _do_handler_table(spark, res, m):
+    from hive_spark.sources import jdbc_handler as jh
+
+    if jh.HANDLER_TABLES and (
+        jh.try_insert_handler_table(spark, m.string)
+        or jh.try_alter_handler_table(spark, m.string)
+        or jh.try_drop_handler_table(spark, m.string)
+    ):
+        return None
+    return _PASS
+
+
+# CREATE TEMPORARY FUNCTION over a class this engine serves natively
+# (dboutput folds at call sites) — registration no-op
+_DBOUTPUT_FUNCTION = re.compile(
+    r"(?i)^\s*CREATE\s+TEMPORARY\s+FUNCTION\s+dboutput\s+AS\b"
+)
+
+
+def _do_dboutput_function(spark, res, m):
+    res.skipped.append(m.string)
+
+
+_DESCRIBE_FUNCTION = re.compile(
+    r"^\s*DESC(?:RIBE)?\s+FUNCTION\s+(?:EXTENDED\s+)?`?(\w+)`?\s*$", re.I
+)
+
+
+def _do_describe_function(spark, res, m):
+    name = m.group(1).lower()
+    if (name in _ENGINE_FOLDED_FNS or name in _MACROS.get(id(spark), {})
+            or name in _FUNC_FOLDS.get(id(spark), {})):
+        # engine-folded functions aren't in Spark's catalog; answer the
+        # way FunctionRegistry would
+        row = (f"{name} is an engine-folded function"
+               " (rewritten inline at parse time)")
+    elif not spark.catalog.functionExists(m.group(1)):
+        # Hive's DESCRIBE FUNCTION on an unknown name is not an error —
+        # it prints this row and the script continues (ref: DescFunction-
+        # Operation.java, golden udf_stddev_pop.q.out)
+        row = f"Function '{m.group(1)}' does not exist."
+    else:
+        return _PASS
+    return spark.createDataFrame([(row,)], "tab_name string")
+
+
+def _do_create_function(spark, res, m):
+    name, cls = m.group(1).lower(), m.group(2)
+    if "MatchPath" in cls:
+        # a user-registered alias of the MatchPath PTF (ptf_register_tblfn.q)
+        _MATCHPATH_FNS.setdefault(id(spark), {"matchpath"}).add(name)
+    elif cls in _FUNCTION_CLASS_FOLDS:
+        _FUNC_FOLDS.setdefault(id(spark), {})[name] = _FUNCTION_CLASS_FOLDS[cls]
+    else:
+        return _PASS
+
+
+def _do_drop_function(spark, res, m):
+    name = m.group(1).lower()
+    if _FUNC_FOLDS.get(id(spark), {}).pop(name, None) is not None:
+        return None
+    if name in _MATCHPATH_FNS.get(id(spark), set()):
+        _MATCHPATH_FNS[id(spark)].discard(name)
+        return None
+    return _PASS
+
+
+_DML = re.compile(
+    r"^\s*(?:UPDATE\b(?!\s+STATISTICS\b)|DELETE\s+FROM\b|MERGE\b)", re.I
+)
+# INSERT / TRUNCATE of a versioned table (other tables are Spark's)
+_VERSIONED_WRITE = re.compile(r"^\s*(?:INSERT|TRUNCATE)\b", re.I)
+
+
+def _do_dml(spark, res, m):
+    return None if _exec_dml(spark, res, m.string) else _PASS
+
+
+@dataclass(frozen=True)
+class _Statement:
+    name: str
+    pattern: re.Pattern
+    handler: object  # (spark, res, m) -> None | DataFrame | _PASS | str
+    explain: str | None = None  # _DESCRIPTOR, _STAGE_BLOCK or None: Spark
+
+
+_S, _D, _B = _Statement, _DESCRIPTOR, _STAGE_BLOCK
+# Statement kinds the engine runs itself, in priority order (Hive's
+# CommandProcessorFactory plus the DDL/DML analyzers Spark lacks). The
+# first entry whose pattern matches and whose handler does not decline
+# handles the statement; the rest goes to Spark (`_exec_sql`).
+# `record_owner` and `default_storage_handler` are side steps that
+# always decline; the second rewrites the statement for later entries.
+_STATEMENTS = (
+    _S("create_macro", _CREATE_MACRO, _do_create_macro, _B),
+    _S("drop_macro", _DROP_MACRO, _do_drop_macro, _B),
+    _S("prepare", _PREPARE, _do_prepare, _D),
+    _S("explain", _EXPLAIN, _do_explain),
+    _S("execute", _EXECUTE, _do_execute, _D),
+    _S("show_locks", _SHOW_LOCKS, _do_show_locks, _B),
+    _S("create_scheduled_query", _SCHED_CREATE, _do_create_scheduled_query),
+    _S("alter_scheduled_query", _SCHED_ALTER, _do_alter_scheduled_query),
+    _S("drop_scheduled_query", _SCHED_DROP, _do_drop_scheduled_query),
+    _S("dfs", _DFS, _do_dfs),
+    _S("source", _SOURCE, _do_source),
+    _S("rename_table", _RENAME_TABLE, _do_rename_table),
+    _S("rename_view", _RENAME_VIEW, _do_rename_view),
+    _S("create_table_like_file", _CREATE_LIKE_FILE,
+       _do_create_table_like_file),
+    _S("drop_partition", _DROP_PARTITION, _do_drop_partition, _D),
+    _S("exchange_partition", _EXCHANGE_PARTITION, _do_exchange_partition, _D),
+    _S("export", _EXPORT_STMT, _do_export, _D),
+    _S("import", _IMPORT_STMT, _do_import, _D),
+    _S("add_constraint", _ADD_CONSTRAINT, _do_add_constraint, _D),
+    _S("drop_constraint", _DROP_CONSTRAINT, _do_drop_constraint),
+    _S("bang", _BANG, _do_bang),
+    _S("shell", _SHELL, _do_shell),
+    _S("transaction", _TXN, _do_transaction),
+    _S("authorization", _AUTHORIZATION, _do_authorization, _B),
+    _S("record_owner", _CREATE_OWNED, _do_record_owner),
+    _S("lock", _LOCK_STMT, _do_lock, _D),
+    _S("unlock", _UNLOCK_STMT, _do_unlock, _D),
+    _S("compact", _COMPACT_STMT, _do_compact, _D),
+    _S("view_partition", _ALTER_VIEW_PART, _do_view_partition),
+    _S("show_partitions", _SHOW_PARTITIONS, _do_show_partitions, _B),
+    _S("show_table_extended_view_partition", _SHOW_TABLE_EXTENDED_PART,
+       _do_show_table_extended_view_partition),
+    _S("describe_view_partition", _DESCRIBE_PART, _do_describe_view_partition),
+    _S("describe_xpath", _DESCRIBE_XPATH, _do_describe_xpath),
+    _S("show_columns", _SHOW_COLUMNS, _do_show_columns, _B),
+    _S("show_compactions", re.compile(r"^\s*SHOW\s+COMPACTIONS\b", re.I),
+       _do_show_compactions, _B),
+    _S("show_transactions", re.compile(r"^\s*SHOW\s+TRANSACTIONS\s*$", re.I),
+       _do_show_transactions, _D),
+    _S("add_resource", _ADD, _do_add_resource),
+    _S("metadata_noop", _METADATA_NOOP, _do_metadata_noop, _D),
+    _S("create_materialized_view", _CREATE_MV, _do_create_materialized_view),
+    _S("drop_materialized_view", _DROP_MV, _do_drop_materialized_view, _D),
+    _S("show_materialized_views", _SHOW_MVS, _do_show_materialized_views),
+    _S("rebuild_materialized_view", _REBUILD_MV,
+       _do_rebuild_materialized_view, _D),
+    _S("create_external_text", _CREATE_EXT_TEXT, _do_create_external_text),
+    _S("insert_directory", _INSERT_DIR, _do_insert_directory),
+    _S("from_insert_directory", _FROM_INSERT_DIRECTORY,
+       _do_from_insert_directory),
+    _S("update_columns", _UPDATE_COLUMNS, _do_alter_columns, _D),
+    _S("alter_columns", _ALTER_TABLE, _do_alter_columns),
+    _S("truncate_columns", _TRUNCATE_COLUMNS, _do_truncate_columns),
+    _S("show_create_database", _SHOW_CREATE_DATABASE,
+       _do_show_create_database, _D),
+    _S("reset", _RESET, _do_reset),
+    _S("set", _SET, _do_set),
+    _S("load_data", _LOAD_DATA, _do_load_data),
+    _S("default_storage_handler", _DEFAULT_STORAGE_HANDLER,
+       _do_default_storage_handler),
+    _S("jdbc_table", _STORED_BY, _do_jdbc_table),
+    _S("handler_table", _HANDLER_TABLE, _do_handler_table),
+    _S("dboutput_function", _DBOUTPUT_FUNCTION, _do_dboutput_function),
+    _S("describe_function", _DESCRIBE_FUNCTION, _do_describe_function),
+    _S("create_function", _CREATE_FUNCTION_CLASS, _do_create_function),
+    _S("drop_function", _DROP_FUNCTION, _do_drop_function),
+    _S("dml", _DML, _do_dml, _D),
+    _S("versioned_write", _VERSIONED_WRITE, _do_dml),
+)
+
+
+def _dispatch(spark: SparkSession, res: ScriptResult, stmt: str) -> str:
+    """Run one statement through `_STATEMENTS`, else Spark; returns the
+    name of the entry that handled it ("sql" for Spark)."""
+    for entry in _STATEMENTS:
+        m = entry.pattern.match(stmt)
+        if m is None:
+            continue
+        out = entry.handler(spark, res, m)
+        if out is _PASS:
+            continue
+        if isinstance(out, str):
+            stmt = out
+            continue
+        if out is not None:
+            res.results.append(out)
+        return entry.name
+    _exec_sql(spark, res, stmt)
+    return "sql"
+
+
+_DYNAMIC_OVERWRITE = re.compile(
+    r"(?i)^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?[\w.`]+\s*"
+    r"PARTITION\s*\(([^)]*)\)"
+)
+
+
+def _exec_sql(spark: SparkSession, res: ScriptResult, stmt: str) -> None:
+    """The Spark path: Hive-only syntax rewritten, then `_run_sql`."""
+    if (
+        res.set_commands.get("hive.support.quoted.identifiers", "").lower()
+        == "none"
+        and re.search(r"`[^`]+`", stmt)
+    ):
+        stmt = _expand_regex_columns(spark, stmt)
+    mp_names = _MATCHPATH_FNS.get(id(spark), {"matchpath"})
+    if any(re.search(rf"(?i)\b{n}\s*\(\s*on\b", stmt) for n in mp_names):
+        stmt = _exec_matchpath_ptf(spark, stmt, mp_names)
+    sql = rewrite_statement(spark, stmt)
+    # hive.optimize.cte.materialize.threshold: spool WITH-CTEs referenced
+    # >= threshold times (ref: TableScanToSpoolRule; default 3 per
+    # HiveConf.java:2686; <= 0 disables)
+    try:
+        thresh = int(res.set_commands.get(
+            "hive.optimize.cte.materialize.threshold", "3"
+        ))
+    except ValueError:
+        thresh = 3
+    if thresh > 0:
+        from hive_spark.plans.cte_spool import spool_ctes
+
+        sql = spool_ctes(spark, sql, thresh)
+    # Hive: dynamic-partition INSERT OVERWRITE replaces only the
+    # partitions the query produces (FileSinkOperator with
+    # hive.exec.dynamic.partition); Spark's STATIC mode would truncate
+    # the whole table first — scope dynamic mode to the statement
+    key = "spark.sql.sources.partitionOverwriteMode"
+    dyn = _DYNAMIC_OVERWRITE.match(sql)
+    prev = None
+    if dyn and any("=" not in kv for kv in dyn.group(1).split(",") if kv.strip()):
+        prev = spark.conf.get(key, "STATIC")
+        spark.conf.set(key, "dynamic")
+    try:
+        df = _run_sql(spark, sql, res.retries, len(res.statements))
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+    if df.columns:  # statements with a result shape (SELECT/SHOW/...)
+        res.results.append(_buffer_rows(spark, df))
+
+
+def _run_statements(spark: SparkSession, res: ScriptResult, text: str) -> None:
+    # qt:database harness directives live in comments, so resolve them
+    # from the raw text before the splitter strips them
+    if "qt:database" in text:
+        from hive_spark.sources import jdbc_handler
+
+        res.defaults.update(jdbc_handler.database_vars(text, spark))
+    for stmt in split_statements(text):
+        stmt = _substitute_vars(stmt, res)
+        # privilege enforcement FIRST (no-op unless hive.security.
+        # authorization.enabled=true), before ANY handler can run the
+        # statement — EXPLAIN ANALYZE executes, and so do EXECUTE,
+        # partition DDL, EXPORT/IMPORT and LOAD DATA (Hive authorizes at
+        # compile time in SQLStdHiveAuthorizationValidator)
+        authz.check_statement(spark, stmt, prepared=res.prepared)
+        name = _dispatch(spark, res, stmt)
+        res.statements.append((len(res.statements), name))
+
+
 def run_script(spark: SparkSession, text: str) -> ScriptResult:
     from hive_spark.operators import ensure_engine
 
@@ -6852,1135 +7946,13 @@ def run_script(spark: SparkSession, text: str) -> ScriptResult:
     res = ScriptResult()
     # ${hiveconf:hive.metastore.warehouse.dir} resolves from HiveConf in
     # the CLI even when no script SET it; map it to the live Spark
-    # warehouse (scripts dfs-touch files inside table directories).
-    # setdefault: a script-level SET still overrides via the bare key.
-    _wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if _wh.startswith("file:"):
-        _wh = _wh.split(":", 1)[1]
-    res.set_commands.setdefault("hiveconf:hive.metastore.warehouse.dir", _wh)
-    # qt:database harness directives live in comments, so resolve them
-    # from the raw text before the splitter strips them
-    if "qt:database" in text:
-        from hive_spark.sources import jdbc_handler as _jh
-
-        res.set_commands.update(_jh.database_vars(text, spark))
+    # warehouse (scripts dfs-touch files inside table directories)
+    wh = spark.conf.get("spark.sql.warehouse.dir", "")
+    res.defaults["hiveconf:hive.metastore.warehouse.dir"] = (
+        wh.split(":", 1)[1] if wh.startswith("file:") else wh
+    )
     try:
-        for index, stmt in enumerate(split_statements(text)):
-            stmt = _substitute_vars(stmt, res)
-            # privilege enforcement FIRST (no-op unless
-            # hive.security.authorization.enabled=true), before ANY
-            # handler can run the statement — checking later in the
-            # chain let EXPLAIN ANALYZE (which executes), EXECUTE of
-            # prepared statements, partition DDL, EXPORT/IMPORT and
-            # LOAD DATA bypass enforcement (r6 ADVICE; Hive authorizes
-            # at compile time in SQLStdHiveAuthorizationValidator)
-            from hive_spark import authz
-
-            authz.check_statement(spark, stmt, prepared=res.prepared)
-            m = _CREATE_MACRO.match(stmt)
-            if m:
-                name, sig, body = m.group(1).lower(), m.group(2), m.group(3)
-                params = [
-                    p.strip().split()[0] for p in sig.split(",") if p.strip()
-                ]
-                _MACROS.setdefault(id(spark), {})[name] = (params, body.strip())
-                continue
-            m = _DROP_MACRO.match(stmt)
-            if m:
-                _MACROS.get(id(spark), {}).pop(m.group(1).lower(), None)
-                continue
-            m = _PREPARE.match(stmt)
-            if m:
-                res.prepared[m.group(1).lower()] = m.group(2).strip()
-                continue
-            m = _EXPLAIN_ANALYZE.match(stmt)
-            if m:
-                inner_stmt = m.group(1)
-                # engine-executed DML (UPDATE/DELETE/MERGE CoW) has no
-                # Spark plan to instrument — same one-row descriptor the
-                # plain-EXPLAIN dialect route emits (Hive ExplainTask
-                # renders a task tree either way)
-                if (
-                    (_UPDATE_STMT.match(inner_stmt)
-                     and not re.match(r"(?i)^\s*UPDATE\s+STATISTICS\b",
-                                      inner_stmt))
-                    or _DELETE_STMT.match(inner_stmt)
-                    or _match_merge(inner_stmt) is not None
-                ):
-                    res.results.append(
-                        spark.createDataFrame(
-                            [(f"engine metadata operation: "
-                              f"{inner_stmt.split()[0].upper()} ...",)],
-                            "plan string",
-                        )
-                    )
-                    continue
-                # statements with side effects (CTAS, INSERT, DROP, …):
-                # Hive's EXPLAIN ANALYZE profiles the plan but the DDL
-                # effect is NOT committed — explainanalyze_1.q re-creates
-                # the same table for real right after. Explain the inner
-                # SELECT when there is one; never execute the command.
-                ddl_m = re.match(
-                    r"(?i)\s*(CREATE|DROP|ALTER|INSERT|LOAD|TRUNCATE"
-                    r"|GRANT|REVOKE|SHOW|USE|DESC|DESCRIBE|ANALYZE"
-                    r"|MSCK|SET|EXPORT|IMPORT)\b",
-                    inner_stmt,
-                )
-                if ddl_m:
-                    kind = ddl_m.group(1).upper()
-                    sel_text = None
-                    if kind == "CREATE":
-                        # CTAS / CREATE VIEW AS: the query starts after
-                        # the defining AS (a bare SELECT search would
-                        # capture an unbalanced WITH-body fragment)
-                        am2 = re.search(
-                            r"(?is)\bAS\s+((?:WITH|SELECT)\b.*)$", inner_stmt
-                        )
-                        sel_text = am2.group(1) if am2 else None
-                    elif kind == "INSERT":
-                        sm2 = re.search(
-                            r"(?is)\b(?:WITH|SELECT)\b.*$", inner_stmt
-                        )
-                        sel_text = sm2.group(0) if sm2 else None
-                    plan_txt = f"side-effect statement ({kind}): plan only"
-                    if sel_text:
-                        from hive_spark.plans import explain_analyze
-
-                        plan_txt = explain_analyze(
-                            spark.sql(rewrite_statement(spark, sel_text))
-                        )
-                    res.results.append(
-                        spark.createDataFrame([(plan_txt,)], "plan string")
-                    )
-                    continue
-                from hive_spark.plans import explain_analyze
-
-                text_plan = explain_analyze(
-                    spark.sql(rewrite_statement(spark, inner_stmt))
-                )
-                res.results.append(
-                    spark.createDataFrame([(text_plan,)], "plan string")
-                )
-                continue
-            m = _EXECUTE.match(stmt)
-            if m:
-                name = m.group(1).lower()
-                if name not in res.prepared:
-                    raise ValueError(f"EXECUTE of unknown prepared statement {name!r}")
-                args = _parse_literals(spark, m.group(2)) if m.group(2) else []
-                df = _run_sql(
-                    spark, rewrite_statement(spark, res.prepared[name]),
-                    res.retries, index, args=args,
-                )
-                if df.columns:
-                    res.results.append(_buffer_rows(spark, df))
-                continue
-            m = re.match(
-                r"^\s*SHOW\s+LOCKS(?:\s+(?:DATABASE\s+)?`?([\w.]+)`?)?"
-                r"(?:\s+PARTITION\s*\([^)]*\))?(?:\s+EXTENDED)?\s*$",
-                stmt,
-                re.I,
-            )
-            if m:
-                from hive_spark.txn import list_locks
-
-                wanted = (m.group(1) or "").split(".")[-1].lower()
-                rows = list_locks(
-                    {
-                        k: v
-                        for k, v in VERSIONED_TABLES.items()
-                        if not wanted or k.lower() == wanted
-                    }
-                    if wanted
-                    else VERSIONED_TABLES
-                )
-                lock_rows = [
-                    (
-                        r["table"],
-                        r["path"],
-                        r["holder_pid"],
-                        r["holder_alive"],
-                    )
-                    for r in rows
-                ]
-                # explicit LOCK TABLE/DATABASE session locks
-                for key, mode in sorted(
-                    _EXPLICIT_LOCKS.get(id(spark), {}).items()
-                ):
-                    _kind, name = key.split(":", 1)
-                    if wanted and name.split(".")[-1] != wanted:
-                        continue
-                    lock_rows.append((name, mode, os.getpid(), True))
-                res.results.append(
-                    spark.createDataFrame(
-                        lock_rows,
-                        "table string, path string, holder_pid int, holder_alive boolean",
-                    )
-                )
-                continue
-            m = _SCHED_CREATE.match(stmt)
-            if m:
-                from hive_spark.scheduled import ScheduledQueryRegistry
-
-                ScheduledQueryRegistry(spark).create(
-                    m.group(2), m.group(3), m.group(4), replace=bool(m.group(1))
-                )
-                continue
-            m = _SCHED_ALTER.match(stmt)
-            if m:
-                from hive_spark.scheduled import ScheduledQueryRegistry
-
-                reg = ScheduledQueryRegistry(spark)
-                verb = m.group(2).upper()
-                if verb.startswith("ENABLE"):
-                    reg.set_enabled(m.group(1), True)
-                elif verb.startswith("DISABLE"):
-                    reg.set_enabled(m.group(1), False)
-                else:  # EXECUTE — run now, surface its results
-                    out = reg.execute(m.group(1))
-                    res.results.extend(out.results)
-                continue
-            m = _SCHED_DROP.match(stmt)
-            if m:
-                from hive_spark.scheduled import ScheduledQueryRegistry
-
-                ScheduledQueryRegistry(spark).drop(m.group(1))
-                continue
-            if _DFS.match(stmt):
-                _exec_dfs(stmt, res)
-                continue
-            m = re.match(r"^\s*source\s+(\S+)\s*;?\s*$", stmt, re.I)
-            if m:
-                # CliDriver `source <file>`: run the referenced script in
-                # this session (results surface like inline statements)
-                spath = m.group(1)
-                if not os.path.isabs(spath) or not os.path.exists(spath):
-                    for base in LOAD_DATA_BASES:
-                        cand = os.path.normpath(os.path.join(base, spath))
-                        if os.path.exists(cand):
-                            spath = cand
-                            break
-                if not os.path.exists(spath):
-                    raise FileNotFoundError(f"source: {m.group(1)}")
-                sub = run_script(spark, open(spath).read())
-                res.results.extend(sub.results)
-                res.skipped.extend(sub.skipped)
-                continue
-            m = re.match(
-                r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+RENAME\s+TO\s+"
-                r"`?([\w.]+)`?\s*$",
-                stmt,
-                re.I,
-            )
-            if m and "." in m.group(1) + m.group(2):
-                cur = spark.catalog.currentDatabase()
-                sdb = (m.group(1).rsplit(".", 1) + [""])[0] \
-                    if "." in m.group(1) else cur
-                ddb = (m.group(2).rsplit(".", 1) + [""])[0] \
-                    if "." in m.group(2) else cur
-                if sdb.lower() != ddb.lower():
-                    # cross-database RENAME (Hive moves the metastore
-                    # entry; Spark refuses) -> CoW move
-                    src_t, dst_t = m.group(1), m.group(2)
-                    df = spark.table(src_t)
-                    parts = [
-                        c.name
-                        for c in spark.catalog.listColumns(src_t)
-                        if c.isPartition
-                    ]
-                    w = df.write
-                    if parts:
-                        w = w.partitionBy(*parts)
-                    w.saveAsTable(dst_t)
-                    spark.sql(
-                        f"DROP TABLE `{src_t.replace('.', '`.`')}`"
-                    )
-                    continue
-            m = re.match(
-                r"^\s*ALTER\s+VIEW\s+`?([\w.]+)`?\s+RENAME\s+TO\s+"
-                r"`?([\w.]+)`?\s*$",
-                stmt,
-                re.I,
-            )
-            if m and "." in m.group(1) + m.group(2):
-                cur = spark.catalog.currentDatabase()
-                sdb = m.group(1).rsplit(".", 1)[0] if "." in m.group(1) else cur
-                ddb = m.group(2).rsplit(".", 1)[0] if "." in m.group(2) else cur
-                if sdb.lower() != ddb.lower():
-                    # cross-database view RENAME (alter_view_rename.q):
-                    # Hive re-homes the metastore entry; Spark refuses —
-                    # recreate from the stored view text, then drop
-                    src_v, dst_v = m.group(1), m.group(2)
-                    vtext = next(
-                        (r.data_type
-                         for r in spark.sql(
-                             f"DESCRIBE TABLE EXTENDED {src_v}"
-                         ).collect()
-                         if r.col_name == "View Text"),
-                        None,
-                    )
-                    if vtext is None:
-                        raise ValueError(f"{src_v} is not a view")
-                    spark.sql(f"CREATE VIEW {dst_v} AS {vtext}")
-                    spark.sql(f"DROP VIEW {src_v}")
-                    continue
-            m = re.match(
-                r"(?i)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-                r"(IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s+LIKE\s+FILE\s+"
-                r"(PARQUET|ORC)\s+'([^']+)'\s*"
-                r"(?:PARTITIONED\s+BY\s*\(([^)]*)\))?\s*$",
-                stmt,
-            )
-            if m:
-                # CREATE TABLE ... LIKE FILE <fmt> '<path>' (HIVE-26395,
-                # ref: ql/.../ddl/table/create/like/): derive the schema
-                # by reading the file's footer. Hive names data files
-                # 000000_0; this engine writes part-*.snappy.* — fall
-                # back to any data file in the same directory.
-                ine, name, fmt, fpath, parts = m.groups()
-                fpath = re.sub(r"^(?:file|pfile|hdfs):/+", "/", fpath)
-                if not os.path.exists(fpath):
-                    d = os.path.dirname(fpath)
-                    cands = [
-                        os.path.join(d, f)
-                        for f in (os.listdir(d) if os.path.isdir(d) else [])
-                        if not f.startswith(("_", "."))
-                    ]
-                    if not cands:
-                        raise FileNotFoundError(fpath)
-                    fpath = sorted(cands)[0]
-                ddl = spark.read.format(fmt.lower()).load(fpath).schema.toDDL()
-                pclause = f" PARTITIONED BY ({parts})" if parts else ""
-                spark.sql(
-                    f"CREATE TABLE {'IF NOT EXISTS ' if ine else ''}"
-                    f"`{name.replace('.', '`.`')}` ({ddl})"
-                    f" USING {fmt.lower()}{pclause}"
-                )
-                continue
-            m = re.match(
-                r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+DROP\s+"
-                r"(IF\s+EXISTS\s+)?"
-                r"((?:PARTITION\s*\((?:[^()]|\([^()]*\))*\)\s*,?\s*)+)"
-                r"(?:PURGE\s*)?$",
-                stmt,
-                re.I,
-            )
-            if m:
-                specs = re.findall(
-                    r"PARTITION\s*\(((?:[^()]|\([^()]*\))*)\)",
-                    m.group(3), re.I,
-                )
-                if len(specs) == 1:
-                    # single spec: helper expands Hive partial/comparator
-                    # forms; a full equality spec falls through to Spark
-                    if _drop_partial_partitions(
-                        spark, m.group(1), specs[0],
-                        if_exists=bool(m.group(2)),
-                    ):
-                        continue
-                else:
-                    # Hive allows DROP PARTITION (...), PARTITION (...)
-                    # (AlterTableDropPartitionAnalyzer: one desc per
-                    # spec); Spark parses only one clause — expand each
-                    tbl_q = m.group(1).replace(".", "`.`")
-                    for sp in specs:
-                        if not _drop_partial_partitions(
-                            spark, m.group(1), sp,
-                            if_exists=bool(m.group(2)),
-                        ):
-                            spark.sql(
-                                f"ALTER TABLE `{tbl_q}` DROP "
-                                f"{m.group(2) or ''}PARTITION ({sp})"
-                            )
-                    continue
-            m = _EXCHANGE_PARTITION.match(stmt)
-            if m:
-                # EXCHANGE PARTITION (ref: ql/.../ddl/table/partition/
-                # exchange/AlterTableExchangePartitionAnalyzer.java): the
-                # partition MOVES source -> destination
-                dst, spec, src = m.groups()
-                cond = " AND ".join(
-                    "`{}` = {}".format(
-                        k.strip().strip("`"),
-                        v.strip()
-                        if v.strip()[:1] in "'\""
-                        else "'" + v.strip() + "'",
-                    )
-                    for k, v in (
-                        kv.split("=", 1) for kv in spec.split(",")
-                    )
-                )
-                moved = spark.table(src).where(cond)
-                moved.write.insertInto(dst, overwrite=False)
-                spark.sql(
-                    f"ALTER TABLE `{src.replace('.', '`.`')}` "
-                    f"DROP IF EXISTS PARTITION ({spec})"
-                )
-                continue
-            m = _EXPORT_STMT.match(stmt)
-            if m:
-                _exec_export(spark, m)
-                continue
-            m = _IMPORT_STMT.match(stmt)
-            if m:
-                _exec_import(spark, m)
-                continue
-            m = _ADD_CONSTRAINT.match(stmt)
-            if m:
-                _exec_add_constraint(spark, m)
-                continue
-            nm = re.match(
-                r"^\s*ALTER\s+TABLE\s+[\w.`]+\s+DROP\s+CONSTRAINT\s+"
-                r"`?(\w+)`?\s*$",
-                stmt,
-                re.I,
-            )
-            if nm:
-                names = _CONSTRAINT_NAMES.get(id(spark), {})
-                c = names.pop(nm.group(1).lower(), None)
-                reg = CONSTRAINTS.get(id(spark))
-                if reg is not None and c is not None:
-                    reg.constraints = [
-                        x for x in reg.constraints if x is not c
-                    ]
-                continue
-            m = re.match(
-                r"^\s*!\s*(mkdir|rm|rmr|cp|mv|touchz?)\s+(.*)$", stmt,
-                re.I | re.S,
-            )
-            if m:
-                # CliDriver `!<cmd>`: the confined local-file subset maps
-                # onto the dfs executor (same /tmp guard); anything else
-                # below raises rather than silently diverging
-                op = {"touch": "touchz"}.get(m.group(1).lower(), m.group(1))
-                _exec_dfs(f"dfs -{op} {m.group(2)}", res)
-                continue
-            if _SHELL.match(stmt):
-                raise ValueError(
-                    f"shell commands are not executed by the engine: {stmt[:60]!r}"
-                )
-            m = _TXN.match(stmt)
-            if m:
-                verb = re.sub(r"\s+", " ", m.group(1)).strip().upper()
-                from hive_spark.txn import Transaction
-
-                if verb in ("BEGIN", "START TRANSACTION"):
-                    if res.txn is not None and res.txn.active:
-                        raise ValueError("transaction already open")
-                    res.txn = Transaction(spark, dict(VERSIONED_TABLES)).begin()
-                    # repeatable reads: pin every versioned table's view at
-                    # the BEGIN version until COMMIT/ROLLBACK
-                    for name in VERSIONED_TABLES:
-                        if res.txn.pinned_version(name) is not None:
-                            res.txn.read(name).createOrReplaceTempView(name)
-                elif res.txn is None or not res.txn.active:
-                    raise ValueError(f"{verb} without an open transaction")
-                else:
-                    if verb == "COMMIT":
-                        res.txn.commit()
-                    else:
-                        res.txn.rollback()
-                    _restore_latest_views(spark)
-                continue
-            auth = authz.handle(spark, stmt)
-            if auth is not None:
-                if auth is not True and auth.columns:
-                    res.results.append(
-                        spark.createDataFrame(auth.collect(), auth.schema)
-                    )
-                continue
-            cm = _CREATE_NAME.match(stmt) or re.match(
-                r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:MATERIALIZED\s+)?"
-                r"VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?",
-                stmt, re.I,
-            )
-            if cm:
-                authz.record_owner(spark, cm.group(1))
-            dbm = re.match(
-                r"^\s*CREATE\s+(?:REMOTE\s+)?(?:DATABASE|SCHEMA)\s+"
-                r"(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?",
-                stmt, re.I,
-            )
-            if dbm:
-                # database ownership (SQLStd: ALTER/DROP DATABASE need it)
-                authz.record_owner(spark, dbm.group(1) + ".")
-            m = _LOCK_STMT.match(stmt)
-            if m:
-                kind, name, mode = m.groups()
-                key = f"{kind.upper()}:{name.lower()}"
-                _EXPLICIT_LOCKS.setdefault(id(spark), {})[key] = mode.upper()
-                continue
-            m = _UNLOCK_STMT.match(stmt)
-            if m:
-                kind, name = m.groups()
-                _EXPLICIT_LOCKS.get(id(spark), {}).pop(
-                    f"{kind.upper()}:{name.lower()}", None
-                )
-                continue
-            m = _COMPACT_STMT.match(stmt)
-            if m:
-                tbl, pspec, ctype = m.groups()
-                _COMPACTIONS.setdefault(id(spark), []).append(
-                    (tbl.lower(), (pspec or "").strip(), ctype.lower(),
-                     "succeeded")
-                )
-                continue
-            m = _ALTER_VIEW_PART.match(stmt)
-            if m:
-                view, verb, specs_text = m.groups()
-                vparts = _VIEW_PARTS.setdefault(id(spark), {}).setdefault(
-                    view.lower(), []
-                )
-                for sp in re.findall(
-                    r"PARTITION\s*\(([^)]*)\)", specs_text, re.I
-                ):
-                    pname = _part_spec_to_name(sp)
-                    if verb.upper() == "ADD" and pname not in vparts:
-                        vparts.append(pname)
-                    elif verb.upper() == "DROP" and pname in vparts:
-                        vparts.remove(pname)
-                continue
-            m = re.match(
-                r"^\s*SHOW\s+PARTITIONS\s+`?([\w.]+)`?"
-                r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*$",
-                stmt, re.I,
-            )
-            if m:
-                vname = m.group(1).lower()
-                known = vname in _VIEW_PARTS.get(id(spark), {})
-                if not known:
-                    try:
-                        t = spark.catalog.getTable(m.group(1))
-                        known = t.tableType == "VIEW"
-                    except Exception:
-                        known = False
-                if known:
-                    names = _VIEW_PARTS.get(id(spark), {}).get(vname, [])
-                    if m.group(2):
-                        want = _part_spec_to_name(m.group(2))
-                        names = [
-                            p for p in names
-                            if want in p.split("/") or p == want
-                        ]
-                    res.results.append(spark.createDataFrame(
-                        [(p,) for p in names], "partition string",
-                    ))
-                    continue
-            m = re.match(
-                r"^\s*(SHOW\s+TABLE\s+EXTENDED\s+LIKE\s+`?[\w.]+`?)\s+"
-                r"PARTITION\s*\(([^)]*)\)\s*$",
-                stmt, re.I,
-            )
-            if m and re.search(
-                r"`?([\w.]+)`?$", m.group(1)
-            ).group(1).lower() in _VIEW_PARTS.get(id(spark), {}):
-                # metadata-only view partition: the table-level lines
-                res.results.append(
-                    spark.sql(rewrite_statement(spark, m.group(1)))
-                )
-                continue
-            m = re.match(
-                r"^\s*(DESCRIBE|DESC)\s+(FORMATTED\s+|EXTENDED\s+)?"
-                r"`?([\w.]+)`?\s+PARTITION\s*\([^)]*\)\s*$",
-                stmt, re.I,
-            )
-            if m and m.group(3).lower() in _VIEW_PARTS.get(id(spark), {}):
-                # DESCRIBE view PARTITION(...): the view's columns (the
-                # partition is metadata-only)
-                res.results.append(spark.sql(
-                    f"DESCRIBE {m.group(2) or ''}`{m.group(3)}`"
-                ))
-                continue
-            m = re.match(
-                r"^\s*(?:DESCRIBE|DESC)\s+`?([\w.]+)`?\s+"
-                r"([\w$]+(?:\.[\w$]+)+|\w+\.\$\w+\$)\s*$",
-                stmt, re.I,
-            )
-            if m and "$" in m.group(2):
-                # DESCRIBE tbl col.$elem$/.$key$/.$value$[.field...] —
-                # Hive xpath-style type navigation (describe_xpath.q;
-                # ref: ql/.../exec/DDLTask describeTable with a nested
-                # column path). Walk the Spark schema the same way.
-                from pyspark.sql import types as T
-
-                tbl, path = m.group(1), m.group(2)
-                schema = spark.table(tbl).schema
-                toks = path.split(".")
-                dt = schema[[f.name.lower() for f in schema].index(
-                    toks[0].lower())].dataType
-                for tok in toks[1:]:
-                    if tok == "$elem$":
-                        dt = dt.elementType
-                    elif tok == "$key$":
-                        dt = dt.keyType
-                    elif tok == "$value$":
-                        dt = dt.valueType
-                    else:
-                        dt = dt[[f.name.lower() for f in dt.fields].index(
-                            tok.lower())].dataType
-                if isinstance(dt, T.StructType):
-                    rows = [(f.name, f.dataType.simpleString(),
-                             "from deserializer") for f in dt.fields]
-                else:
-                    rows = [(toks[-1], dt.simpleString(),
-                             "from deserializer")]
-                res.results.append(spark.createDataFrame(
-                    rows, "col_name string, data_type string, comment string"
-                ))
-                continue
-            if re.match(
-                r"^\s*EXPLAIN\s+((CREATE|DROP)\s+TEMPORARY\s+MACRO"
-                r"|SHOW\s+GRANT|CREATE\s+ROLE|DROP\s+ROLE|GRANT\s|REVOKE\s"
-                r"|SET\s+ROLE|SHOW\s+CURRENT\s+ROLES|SHOW\s+ROLE"
-                r"|SHOW\s+PRINCIPALS|SHOW\s+LOCKS|SHOW\s+COMPACTIONS)\b",
-                stmt, re.I,
-            ) or re.match(
-                r"^\s*EXPLAIN\s+SHOW\s+(COLUMNS|PARTITIONS)\b[\s\S]*"
-                r"(['\"][^'\"]*['\"]|\bWHERE\b|\bORDER\s+BY\b|\bLIMIT\b)",
-                stmt, re.I,
-            ):
-                # EXPLAIN of the engine-handled SHOW forms: Hive renders
-                # a metadata-op stage; emit the same one-stage summary
-                res.results.append(
-                    spark.createDataFrame(
-                        [("STAGE DEPENDENCIES:",), ("  Stage-0 is a root stage",)],
-                        "Explain string",
-                    )
-                )
-                continue
-            m = re.match(
-                r"^\s*SHOW\s+(SORTED\s+)?COLUMNS\s+(?:FROM|IN)\s+`?([\w.]+)`?"
-                r"(?:\s+(?:FROM|IN)\s+`?([\w]+)`?)?"
-                r"(?:\s+(?:LIKE\s+)?['\"]([^'\"]+)['\"])?\s*$",
-                stmt, re.I,
-            )
-            if m and (m.group(1) or m.group(4)):
-                # SHOW [SORTED] COLUMNS ... ['pattern'] (Hive
-                # ShowColumnsDesc: LIKE keyword optional; *-glob with |
-                # alternation, case-insensitive, output sorted —
-                # show_columns.q). Plain un-patterned SHOW COLUMNS stays
-                # on Spark's native path.
-                tbl = (
-                    f"{m.group(3)}.{m.group(2)}" if m.group(3)
-                    else m.group(2)
-                )
-                if m.group(4):
-                    alts = [
-                        "^" + re.escape(p.replace("*", "%"))
-                        .replace("%", ".*").replace("_", ".") + "$"
-                        for p in m.group(4).split("|")
-                    ]
-                    rx = re.compile("|".join(alts), re.I)
-                else:
-                    rx = re.compile(".*")
-                names = sorted(
-                    (c.name,)
-                    for c in spark.catalog.listColumns(tbl)
-                    if rx.match(c.name)
-                )
-                res.results.append(
-                    spark.createDataFrame(names, "col_name string")
-                )
-                continue
-            m = re.match(
-                r"^\s*SHOW\s+PARTITIONS\s+`?([\w.]+)`?"
-                r"(?:\s+PARTITION\s*\(([^)]*)\))?"
-                r"(?:\s+WHERE\s+([\s\S]*?))?"
-                r"(?:\s+ORDER\s+BY\s+([\s\S]*?))?"
-                r"(?:\s+LIMIT\s+(\d+))?\s*$",
-                stmt, re.I,
-            )
-            if m and (m.group(2) or m.group(3) or m.group(4) or m.group(5)):
-                # SHOW PARTITIONS ... [PARTITION(spec)] [WHERE] [ORDER BY]
-                # [LIMIT] (HIVE-22458 filtered listing, show_partitions2.q):
-                # evaluate over the partition list as string columns —
-                # numeric predicates coerce under non-ANSI comparison,
-                # and __HIVE_DEFAULT_PARTITION__ compares as its literal
-                from urllib.parse import unquote as _unq
-
-                tbl = m.group(1)
-                raw = [
-                    r[0]
-                    for r in spark.sql(
-                        f"SHOW PARTITIONS `{tbl.replace('.', '`.`')}`"
-                    ).collect()
-                ]
-                pnames = [
-                    c.name for c in spark.catalog.listColumns(tbl)
-                    if c.isPartition
-                ]
-                rows2 = [
-                    tuple(
-                        [_unq(kv.split("=", 1)[1]) for kv in r.split("/")]
-                        + [r]
-                    )
-                    for r in raw
-                ]
-                schema = ", ".join(
-                    f"`{n}` string" for n in pnames
-                ) + ", _raw string"
-                pdf = spark.createDataFrame(rows2, schema)
-                pdf.createOrReplaceTempView("_hqls_show_parts")
-                conds = []
-                if m.group(2):
-                    for kv in m.group(2).split(","):
-                        k, v = kv.split("=", 1)
-                        conds.append(f"`{k.strip().strip('`')}` = {v.strip()}")
-                if m.group(3):
-                    conds.append(f"({m.group(3)})")
-                sql = "SELECT _raw AS `partition` FROM _hqls_show_parts"
-                if conds:
-                    sql += " WHERE " + " AND ".join(conds)
-                if m.group(4):
-                    sql += f" ORDER BY {m.group(4)}"
-                if m.group(5):
-                    sql += f" LIMIT {m.group(5)}"
-                out = spark.sql(sql)
-                res.results.append(
-                    spark.createDataFrame(out.collect(), out.schema)
-                )
-                continue
-            if re.match(r"^\s*SHOW\s+COMPACTIONS\b", stmt, re.I):
-                res.results.append(spark.createDataFrame(
-                    [
-                        (str(i + 1), "default", t, p, c, s, "")
-                        for i, (t, p, c, s) in enumerate(
-                            _COMPACTIONS.get(id(spark), [])
-                        )
-                    ],
-                    "compactionid string, dbname string, tabname string,"
-                    " partname string, type string, state string,"
-                    " workerid string",
-                ))
-                continue
-            if re.match(r"^\s*SHOW\s+TRANSACTIONS\s*$", stmt, re.I):
-                open_txns = []
-                if res.txn is not None and getattr(res.txn, "active", False):
-                    open_txns.append(
-                        (str(getattr(res.txn, "txn_id", 1)), "OPEN",
-                         authz.current_user(), "localhost")
-                    )
-                res.results.append(spark.createDataFrame(
-                    open_txns,
-                    "txnid string, state string, user string, host string",
-                ))
-                continue
-            if _ADD.match(stmt) or _METADATA_NOOP.match(stmt):
-                am = re.match(
-                    r"(?i)^\s*(ADD|DELETE)\s+FILES?\s+(.+?)\s*$", stmt
-                )
-                if am:
-                    # ADD FILE ships a script to executors (ref: ql/
-                    # SessionState add_resource); here the executor IS
-                    # local, so record basename -> resolved path and let
-                    # the TRANSFORM USING rewrite absolutize commands
-                    files = _ADDED_FILES.setdefault(id(spark), {})
-                    for p in am.group(2).split():
-                        base = os.path.basename(p.rstrip("/"))
-                        if am.group(1).upper() == "DELETE":
-                            files.pop(base, None)
-                            continue
-                        cand = p
-                        hm = re.match(r"(?i)^hdfs:/+(.*)$", cand)
-                        if hm:
-                            # qtest "HDFS" absolute paths live under
-                            # qtest scratch (same mapping as _exec_dfs),
-                            # except the /tmp/ subtree which stays host
-                            rest = "/" + hm.group(1)
-                            cand = (
-                                rest
-                                if rest.startswith("/tmp/")
-                                else os.path.normpath(QTEST_TMP + rest)
-                            )
-                        if not os.path.isabs(cand) or not os.path.exists(cand):
-                            for b in LOAD_DATA_BASES:
-                                c2 = os.path.normpath(os.path.join(b, p))
-                                if os.path.exists(c2):
-                                    cand = c2
-                                    break
-                        if os.path.exists(cand):
-                            files[base] = os.path.abspath(cand)
-                res.skipped.append(stmt)
-                continue
-            m = _EXPLAIN_SPECIAL.match(stmt)
-            if m:
-                res.results.append(
-                    _exec_explain_special(spark, m.group(1), m.group(2))
-                )
-                continue
-            # EXPLAIN over a statement the engine (not Spark) executes —
-            # metadata ops, MV lifecycle: Hive prints a task tree; the
-            # one-row descriptor is the analog
-            m = re.match(r"^\s*EXPLAIN\s+([\s\S]*)$", stmt, re.I)
-            if m:
-                # strip an explain-mode token so EXPLAIN CBO/COST/
-                # FORMATTED/etc. of an engine-dialect statement still
-                # routes here (Hive explains every statement kind)
-                inner = m.group(1)
-                while True:
-                    stripped = re.sub(
-                        r"(?i)^\s*(?:CBO|COST|JOINCOST|FORMATTED|EXTENDED"
-                        r"|CODEGEN|LOGICAL|AST|DETAIL|REOPTIMIZATION"
-                        r"|VECTORIZATION|ONLY|SUMMARY|OPERATOR|EXPRESSION"
-                        r"|DEBUG|ANALYZE(?!\s+TABLE\b))"
-                        r"\s+",
-                        "", inner, count=1,
-                    )
-                    if stripped == inner:
-                        break
-                    inner = stripped
-            if m and (
-                _METADATA_NOOP.match(inner)
-                or _REBUILD_MV.match(inner)
-                or _DROP_MV.match(inner)
-                or _EXPORT_STMT.match(inner)
-                or _IMPORT_STMT.match(inner)
-                or _ADD_CONSTRAINT.match(inner)
-                or _EXCHANGE_PARTITION.match(inner)
-                or _ALTER_UPDATE_COLS.match(
-                    re.sub(r"(?i)\s+(CASCADE|RESTRICT)\s*$", "",
-                           inner.rstrip())
-                )
-                or (_UPDATE_STMT.match(inner)
-                    and not re.match(r"^\s*UPDATE\s+STATISTICS\b",
-                                     inner, re.I))
-                or _DELETE_STMT.match(inner)
-                or _match_merge(inner) is not None
-                or re.match(
-                    r"(?i)^\s*SHOW\s+CREATE\s+(?:DATABASE|SCHEMA)\b", inner
-                )
-                # comparator / multi-clause DROP PARTITION and SHOW
-                # PARTITIONS are engine-dialect (Spark can't parse them)
-                or re.match(
-                    r"(?i)^\s*ALTER\s+TABLE\s+[\w.`]+\s+DROP\s+"
-                    r"(?:IF\s+EXISTS\s+)?PARTITION\s*\(", inner
-                )
-                or re.match(r"(?i)^\s*SHOW\s+PARTITIONS\b", inner)
-                or re.match(
-                    r"(?i)^\s*SHOW\s+(?:TRANSACTIONS|COMPACTIONS|LOCKS)\b",
-                    inner,
-                )
-                or _LOCK_STMT.match(inner)
-                or _UNLOCK_STMT.match(inner)
-                or _COMPACT_STMT.match(inner)
-                or _PREPARE.match(inner)
-                or _EXECUTE.match(inner)
-            ):
-                res.results.append(
-                    spark.createDataFrame(
-                        [(f"engine metadata operation: "
-                          f"{inner.split()[0].upper()} ...",)],
-                        "plan string",
-                    )
-                )
-                continue
-            m = _CREATE_MV.match(stmt)
-            if m:
-                name, query = m.group(1), m.group(3)
-                sql = rewrite_statement(spark, query)
-                if not (re.search(r"(?i)IF\s+NOT\s+EXISTS", stmt)
-                        and spark.catalog.tableExists(name)):
-                    spark.sql(sql).write.mode("overwrite").saveAsTable(name)
-                _MV_DEFS.setdefault(id(spark), {})[name.lower()] = sql
-                continue
-            m = _DROP_MV.match(stmt)
-            if m:
-                spark.sql(f"DROP TABLE IF EXISTS `{m.group(1)}`")
-                _MV_DEFS.get(id(spark), {}).pop(m.group(1).lower(), None)
-                continue
-            if _SHOW_MVS.match(stmt):
-                res.results.append(
-                    spark.createDataFrame(
-                        [
-                            (n, "Yes", "Manual refresh")
-                            for n in sorted(_MV_DEFS.get(id(spark), {}))
-                        ],
-                        "mv_name string, rewrite_enabled string, mode string",
-                    )
-                )
-                continue
-            m = _REBUILD_MV.match(stmt)
-            if m:
-                sql = _MV_DEFS.get(id(spark), {}).get(m.group(1).lower())
-                if sql is None:
-                    raise ValueError(
-                        f"REBUILD of unknown materialized view {m.group(1)!r}"
-                    )
-                spark.sql(sql).write.mode("overwrite").saveAsTable(m.group(1))
-                continue
-            m = _CREATE_EXT_TEXT.match(stmt)
-            if m and _exec_create_external_complex_text(spark, m):
-                continue
-            m = _INSERT_DIR.match(stmt)
-            if m:
-                _exec_insert_directory(spark, m)
-                continue
-            # FROM <src> INSERT ... with DIRECTORY sinks mixed in: Spark
-            # runs the TABLE multi-insert natively but refuses Hive-format
-            # DIRECTORY sinks — peel those off and run each through the
-            # directory writer (FROM-first SELECT keeps the shared source)
-            fm = re.match(r"(?is)^\s*FROM\s+([\s\S]*?)(\bINSERT\b[\s\S]*)$",
-                          stmt)
-            if fm and re.search(
-                r"(?i)INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?DIRECTORY", fm.group(2)
-            ):
-                head, tail = fm.groups()
-                starts = [s for s, _ in
-                          _top_level_spans(tail, r"\bINSERT\b")]
-                clauses = [
-                    tail[s:e].strip()
-                    for s, e in zip(starts, starts[1:] + [len(tail)])
-                ]
-                kept = []
-                for cl in clauses:
-                    dm = _INSERT_DIR.match(cl)
-                    if dm:
-                        q = f"FROM {head} {dm.group(5)}"
-                        _exec_insert_directory(
-                            spark,
-                            _INSERT_DIR.match(
-                                cl[: dm.start(5)] + q
-                            ) or dm,
-                        )
-                    else:
-                        kept.append(cl)
-                if kept:
-                    spark.sql(rewrite_statement(
-                        spark, f"FROM {head} " + " ".join(kept)
-                    ))
-                continue
-            if _exec_alter_columns(spark, stmt):
-                continue
-            # TRUNCATE TABLE t COLUMNS (c1, c2): Hive clears the named
-            # columns' data (list-bucketing feature, ref: ql/.../ddl/
-            # table/misc/truncate) — CoW null-out of those columns
-            m = re.match(
-                r"(?i)^\s*TRUNCATE\s+TABLE\s+`?([\w.]+)`?"
-                r"(?:\s+PARTITION\s*\([^)]*\))?\s+COLUMNS\s*\(([^)]*)\)\s*$",
-                stmt,
-            )
-            if m:
-                from pyspark.sql import functions as F
-
-                table = m.group(1)
-                cols = {c.strip().strip("`").lower()
-                        for c in m.group(2).split(",")}
-                df = spark.table(table)
-                out = df.select(*[
-                    F.lit(None).cast(dict(df.dtypes)[c]).alias(c)
-                    if c.lower() in cols else F.col(c)
-                    for c in df.columns
-                ])
-                _rewrite_table_inplace(spark, table, out)
-                continue
-            # SHOW CREATE DATABASE (Hive DDL Spark lacks): rebuild the
-            # statement from the catalog's database metadata
-            m = re.match(
-                r"(?i)^\s*SHOW\s+CREATE\s+(?:DATABASE|SCHEMA)\s+"
-                r"`?([\w]+)`?\s*$",
-                stmt,
-            )
-            if m:
-                db = spark.catalog.getDatabase(m.group(1))
-                text_out = f"CREATE DATABASE `{db.name}`"
-                if db.description:
-                    text_out += f"\nCOMMENT\n  '{db.description}'"
-                text_out += f"\nLOCATION\n  '{db.locationUri}'"
-                res.results.append(
-                    spark.createDataFrame(
-                        [(text_out,)], "createdb_stmt string"
-                    )
-                )
-                continue
-            m = re.match(
-                r"(?i)^\s*RESET(?:\s+(-d\s+)?([\w.\s$:]+?))?\s*$", stmt
-            )
-            if m:
-                # Hive RESET / RESET -d key... (SetProcessor): drop the
-                # session overrides; Spark's RESET grammar rejects the
-                # -d flag and dotted hive keys, so handle it here
-                keys = (m.group(2) or "").split()
-                if not keys:
-                    # bare RESET restores EVERY overridden conf (Hive
-                    # SetProcessor), not just the recorded-key dict —
-                    # un-apply each conf this session actually set
-                    keys = list(res.set_commands)
-                    res.set_commands.clear()
-                for key in keys:
-                    res.set_commands.pop(key, None)
-                    try:
-                        spark.sql(f"RESET `{key}`")
-                    except Exception:
-                        pass
-                continue
-            m = _SET.match(stmt)
-            if m and m.group(2) is not None:
-                key, val = m.group(1), m.group(2).strip()
-                res.set_commands[key] = val
-                # qtests set fs.default.name=invalidscheme:/// to prove
-                # metadata-only ops never touch the FS; Spark propagates
-                # session conf into the Hadoop conf of every file source,
-                # so applying it poisons all later reads in the session.
-                # This runtime is always local-FS — record, don't apply.
-                if key.lower() in ("fs.default.name", "fs.defaultfs"):
-                    continue
-                try:
-                    spark.conf.set(key, val)
-                except Exception:
-                    pass  # hive-only knob: recorded above, nothing to set
-                continue
-            m = _LOAD_DATA.match(stmt)
-            if m:
-                _exec_load_data(spark, m)
-                continue
-            from hive_spark.sources import jdbc_handler as _jh
-
-            # DefaultStorageHandler is Hive's no-op handler — the table
-            # behaves exactly like a managed table (ref: ql/.../metadata/
-            # DefaultStorageHandler.java); strip the clause
-            stmt = re.sub(
-                r"(?is)\bSTORED\s+BY\s+'org\.apache\.hadoop\.hive\.ql\."
-                r"metadata\.DefaultStorageHandler'"
-                r"(\s+WITH\s+SERDEPROPERTIES\s*\((?:[^()]|\([^()]*\))*\))?",
-                "",
-                stmt,
-            )
-            if re.search(r"STORED\s+BY\b", stmt, re.I) \
-                    and _jh.try_create_jdbc_table(spark, stmt):
-                continue
-            if _jh.HANDLER_TABLES and (
-                _jh.try_insert_handler_table(spark, stmt)
-                or _jh.try_alter_handler_table(spark, stmt)
-                or _jh.try_drop_handler_table(spark, stmt)
-            ):
-                continue
-            # CREATE TEMPORARY FUNCTION over a class this engine serves
-            # natively (dboutput folds at call sites) — registration noop
-            if re.match(
-                r"(?i)^\s*CREATE\s+TEMPORARY\s+FUNCTION\s+dboutput\s+AS\b",
-                stmt,
-            ):
-                res.skipped.append(stmt)
-                continue
-            m = re.match(
-                r"^\s*DESC(?:RIBE)?\s+FUNCTION\s+(?:EXTENDED\s+)?"
-                r"`?(\w+)`?\s*$",
-                stmt,
-                re.I,
-            )
-            if m and (
-                m.group(1).lower() in _ENGINE_FOLDED_FNS
-                or m.group(1).lower() in _MACROS.get(id(spark), {})
-                or m.group(1).lower() in _FUNC_FOLDS.get(id(spark), {})
-            ):
-                # engine-folded functions aren't in Spark's catalog;
-                # answer the way FunctionRegistry would
-                name = m.group(1).lower()
-                res.results.append(
-                    spark.createDataFrame(
-                        [(f"{name} is an engine-folded function "
-                          f"(rewritten inline at parse time)",)],
-                        "tab_name string",
-                    )
-                )
-                continue
-            if m and not spark.catalog.functionExists(m.group(1)):
-                # Hive's DESCRIBE FUNCTION on an unknown name is not an
-                # error — it prints this row and the script continues
-                # (ref: DescFunctionOperation.java, golden
-                # udf_stddev_pop.q.out)
-                res.results.append(
-                    spark.createDataFrame(
-                        [(f"Function '{m.group(1)}' does not exist.",)],
-                        "tab_name string",
-                    )
-                )
-                continue
-            m = _CREATE_FUNCTION_CLASS.match(stmt)
-            if m and "MatchPath" in m.group(2):
-                # a user-registered alias of the MatchPath PTF
-                # (ptf_register_tblfn.q)
-                _MATCHPATH_FNS.setdefault(id(spark), {"matchpath"}).add(
-                    m.group(1).lower()
-                )
-                continue
-            if m and m.group(2) in _FUNCTION_CLASS_FOLDS:
-                _FUNC_FOLDS.setdefault(id(spark), {})[m.group(1).lower()] = (
-                    _FUNCTION_CLASS_FOLDS[m.group(2)]
-                )
-                continue
-            m = _DROP_FUNCTION.match(stmt)
-            if m and _FUNC_FOLDS.get(id(spark), {}).pop(
-                m.group(1).lower(), None
-            ) is not None:
-                continue
-            if m and m.group(1).lower() in _MATCHPATH_FNS.get(
-                id(spark), set()
-            ):
-                _MATCHPATH_FNS[id(spark)].discard(m.group(1).lower())
-                continue
-            if _exec_dml(spark, res, stmt):
-                continue
-            if (
-                res.set_commands.get(
-                    "hive.support.quoted.identifiers", ""
-                ).lower() == "none"
-                and re.search(r"`[^`]+`", stmt)
-            ):
-                stmt = _expand_regex_columns(spark, stmt)
-            _mp_names = _MATCHPATH_FNS.get(id(spark), {"matchpath"})
-            if any(
-                re.search(rf"(?i)\b{n}\s*\(\s*on\b", stmt) for n in _mp_names
-            ):
-                stmt = _exec_matchpath_ptf(spark, stmt, _mp_names)
-            rewritten = rewrite_statement(spark, stmt)
-            # hive.optimize.cte.materialize.threshold: spool WITH-CTEs
-            # referenced >= threshold times (ref: TableScanToSpoolRule;
-            # default 3 per HiveConf.java:2686; <= 0 disables)
-            try:
-                _cte_thresh = int(
-                    res.set_commands.get(
-                        "hive.optimize.cte.materialize.threshold", "3"
-                    )
-                )
-            except ValueError:
-                _cte_thresh = 3
-            if _cte_thresh > 0:
-                from hive_spark.plans.cte_spool import spool_ctes
-
-                rewritten = spool_ctes(spark, rewritten, _cte_thresh)
-            # Hive: dynamic-partition INSERT OVERWRITE replaces only the
-            # partitions the query produces (FileSinkOperator with
-            # hive.exec.dynamic.partition); Spark's STATIC mode would
-            # truncate the whole table first — scope dynamic mode to the
-            # statement
-            _m_dyn = re.match(
-                r"(?i)^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?[\w.`]+\s*"
-                r"PARTITION\s*\(([^)]*)\)",
-                rewritten,
-            )
-            _prev_mode = None
-            if _m_dyn and any(
-                "=" not in kv
-                for kv in _m_dyn.group(1).split(",")
-                if kv.strip()
-            ):
-                _prev_mode = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "STATIC"
-                )
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-            try:
-                df = _run_sql(spark, rewritten, res.retries, index)
-            finally:
-                if _prev_mode is not None:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode",
-                        _prev_mode,
-                    )
-            if df.columns:  # statements with a result shape (SELECT/SHOW/...)
-                res.results.append(_buffer_rows(spark, df))
+        _run_statements(spark, res, text)
     except BaseException:
         # A failing statement inside BEGIN..COMMIT must not strand the
         # transaction: roll back (releasing the write locks) and restore

@@ -32,19 +32,33 @@ def test_minhash_lsh_single_derivation(spark, sf_dir):
     The window rewrite derives once — pin 1 scan and no join in the
     physical plan so a regression back to the double-derivation shape
     fails loudly."""
-    import io
-    from contextlib import redirect_stdout
+    nodes = _executed_plan_nodes(
+        text.REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
+    )
+    # the old self-join plan had two scan nodes
+    assert [n for n in nodes if "Scan" in n] == ["FileSourceScanExec"]
+    assert not [n for n in nodes if "Join" in n]
+    assert "WindowExec" in nodes
 
-    df = text.REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    # one scan node = two mentions (tree line + operator-detail line);
-    # the old self-join plan had two scan nodes = four mentions
-    assert plan.count("Scan parquet") == 2
-    assert "Join" not in plan
-    assert "Window" in plan
+
+def _executed_plan_nodes(df) -> list[str]:
+    """Class names of the nodes of `df`'s executed physical plan, with
+    the adaptive wrapper and its query stages unwrapped."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if "QueryStage" in name:
+            todo.append(node.plan())
+            continue
+        names.append(name)
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.length()))
+    return names
 
 
 def test_simhash_sane(spark, sf_dir):
