@@ -24,15 +24,14 @@ Gap list from SURVEY.md §7.3:
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import SparkSession
 
 # ---------------------------------------------------------------------------
 # SQL scalar UDFs (JVM-side, codegen'd — zero Python in the data path)
 # ---------------------------------------------------------------------------
 
-# `quote` and `mask` are native in Spark 4 with Hive-matching semantics
-# (verified: quote("don't") -> 'don\'t', mask('Abc-123') -> Xxx-nnn);
-# the positional mask variants below compose the native `mask`.
 # `quote` and `mask` are native in Spark 4 with Hive-matching semantics
 # (verified: quote("don't") -> 'don\'t', mask('Abc-123') -> Xxx-nnn);
 # the positional mask variants below compose the native `mask`.
@@ -282,6 +281,18 @@ def _py_context_ngrams(rows, context, k):
                 ):
                     grams.append(tuple(win[j] for j in holes))
     return _topk_ngrams(grams, k)
+
+
+# Sessions register_once has installed the gap functions into. Weak, so a
+# stopped session's entry goes with it and never matches a later session.
+_REGISTERED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
+def register_once(spark: SparkSession) -> None:
+    """register_all, unless this session already ran it through here."""
+    if spark not in _REGISTERED:
+        register_all(spark)
+        _REGISTERED.add(spark)
 
 
 def register_all(spark: SparkSession) -> None:

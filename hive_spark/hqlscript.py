@@ -1851,7 +1851,8 @@ def _lazy_convert_expr(src: str, dt, delims: list[str], depth: int) -> str:
     def d(i: int) -> str:
         while len(delims) <= i:
             delims.append(chr(len(delims) + 1))
-        return _sql_quote_delim(delims[i])
+        # split and str_to_map take regexes; Hive splits on the literal
+        return _sql_quote_delim(re.escape(delims[i]))
 
     if isinstance(dt, ArrayType):
         inner = _lazy_convert_expr("x", dt.elementType, delims, depth + 1)

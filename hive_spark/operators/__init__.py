@@ -30,28 +30,34 @@ class QuerySpec:
     doc: str = ""
 
 
-# Runtime confs a *foreign* SparkSession (the driver's) needs before our
-# queries run. Everything here is runtime-settable (no JVM restart).
+# Confs every engine session needs: get_session builds with them, and
+# ensure_engine sets them on a *foreign* SparkSession (the driver's) before
+# our queries run. Everything here is runtime-settable (no JVM restart).
 _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
-    # Hive NULL-on-error semantics (div/0, bad casts) vs Spark 4 ANSI default
+    # Hive semantics: x/0 -> NULL, invalid cast -> NULL, silent overflow
+    # (Spark 4 defaults ANSI=true, which ERRORS on all three — a real
+    # behavior divergence for any query over dirty data)
     "spark.sql.ansi.enabled": "false",
     # Hive INSERT semantics: implicit casts on write (string key -> INT
     # column succeeds, malformed values become NULL) — Spark's ANSI
     # store-assignment policy would reject the qtest INSERT OVERWRITEs
     "spark.sql.storeAssignmentPolicy": "LEGACY",
-    # Hive date functions speak Java SimpleDateFormat patterns
+    # Hive's date_format/unix_timestamp/from_unixtime speak Java
+    # SimpleDateFormat ('YYYY', 'u', 'MM/dd/yy' two-digit years); Spark >= 3
+    # errors on those patterns unless the parser runs in the LEGACY mode
     "spark.sql.legacy.timeParserPolicy": "LEGACY",
-    # Hive map construction keeps the LAST value for duplicate keys
+    # Hive builds maps with HashMap.put — duplicate keys keep the LAST
+    # value (str_to_map, map()); Spark 3+ errors by default
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+    # parquet TIMESTAMP(NANOS) reads as BIGINT; session.load_tables
+    # converts it (Spark has no nanosecond timestamp type)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
 }
-
-_FUNCS_REGISTERED: set[int] = set()
 
 
 def spool_sort(df: DataFrame, *cols) -> DataFrame:
@@ -96,12 +102,9 @@ def ensure_engine(spark: SparkSession) -> None:
             spark.conf.set(k, v)
         except Exception:
             pass
-    key = id(spark)
-    if key not in _FUNCS_REGISTERED:
-        from hive_spark.functions import register_all
+    from hive_spark.functions import register_once
 
-        register_all(spark)
-        _FUNCS_REGISTERED.add(key)
+    register_once(spark)
 
 
 _VIEWS_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
@@ -114,9 +117,10 @@ _ACTIVE_SF: dict[int, str] = {}
 
 def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register the testdata tables as temp views on this session and
-    return them. Memoized while sf_dir stays the active registration:
-    registration reads parquet footers for every table, which adds up
-    across a 100-query registry run."""
+    return them. Memoized while sf_dir stays the active registration.
+    Registration runs no Spark job (schemas come from the parquet footers,
+    see session.load_tables), but it still reads a footer and creates a
+    view per table, which adds up across a 100-query registry run."""
     from hive_spark.session import register_views
 
     sid = id(spark)

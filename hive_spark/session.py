@@ -21,6 +21,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
+
+from hive_spark.functions import register_once
+from hive_spark.operators import _RUNTIME_CONFS
 
 # Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -47,12 +51,13 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    Local test default is ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
+    Local test default is ``local[$SPARK_GRAFT_CPUS]``, where the variable
+    defaults to the cores this process may run on; on a real cluster the
     caller passes ``master=None`` with spark-submit providing the master and
     the same configs scale up unchanged.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
@@ -60,45 +65,29 @@ def get_session(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # -- determinism / oracle parity --------------------------------
-        .config("spark.sql.session.timeZone", "UTC")
-        # Hive semantics: x/0 -> NULL, invalid cast -> NULL, silent overflow
-        # (Spark 4 defaults ANSI=true, which ERRORS on all three — a real
-        # behavior divergence for any query over dirty data)
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.storeAssignmentPolicy", "LEGACY")
-        # Hive's date_format/unix_timestamp/from_unixtime speak Java
-        # SimpleDateFormat ('YYYY', 'u', 'MM/dd/yy' two-digit years);
-        # Spark >= 3 errors on those patterns unless the parser runs in
-        # the LEGACY (SimpleDateFormat) mode Hive uses
-        .config("spark.sql.legacy.timeParserPolicy", "LEGACY")
-        # Hive builds maps with HashMap.put — duplicate keys keep the
-        # LAST value (str_to_map, map()); Spark 3+ errors by default
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        # Hive semantics, the parquet timestamp read and AQE: the confs
+        # ensure_engine also sets on a foreign session
+        .config(map=_RUNTIME_CONFS)
         # deep LATERAL VIEW chains exceed the default 100 analyzer
         # iterations (lateral_view_multi.q)
         .config("spark.sql.analyzer.maxIterations", "500")
         # -- optimizer: everything Hive's Optimizer.java does, built in --
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.cbo.joinReorder.enabled", "true")
         .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # -- execution ---------------------------------------------------
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # testdata parquet stores TIMESTAMP(NANOS); read as long + convert
-        # in load_tables (Spark has no native ns timestamp type)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
     )
     # Shuffle/blockmgr scratch: /tmp is subject to tmpfiles purging on this
     # host (observed mid-run: FAILED_READ_FILE on /tmp/spark-*), so default
@@ -126,11 +115,18 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    # Register the Hive function gap-fill into this session's SQL namespace.
-    from hive_spark.functions import register_all
-
-    register_all(spark)
+    # Register the Hive function gap-fill into this session's SQL namespace
+    # (ensure_engine then finds it done).
+    register_once(spark)
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 16g: local mode runs the
+    whole engine in the driver JVM, and the rest of the host is left to
+    off-heap buffers, the Python workers and the page cache."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
 
 
 def load_tables(
@@ -138,11 +134,16 @@ def load_tables(
     sf_dir: str = DEFAULT_SF_DIR,
     tables: tuple[str, ...] = TESTDATA_TABLES,
 ) -> dict[str, DataFrame]:
-    """Load the testdata parquet tables as DataFrames.
+    """Load the testdata parquet tables as DataFrames without running a
+    Spark job.
 
-    Plain `spark.read.parquet` — Catalyst handles column pruning and filter
-    pushdown into the scan; nothing to hand-roll (Hive needed MapOperator +
-    SerDe per format, ref: ql/.../exec/MapOperator.java:78).
+    Each table's schema comes from one parquet footer, read with pyarrow
+    (Hive keeps the columns in the table's StorageDescriptor instead of
+    asking the data, ref: hive_metastore.thrift:478); a plain
+    `spark.read.parquet` would run one schema-inference job per table.
+    Catalyst handles column pruning and filter pushdown into the scan;
+    nothing to hand-roll (Hive needed MapOperator + SerDe per format, ref:
+    ql/.../exec/MapOperator.java:78).
     """
     from pyspark.sql import functions as F
 
@@ -151,41 +152,62 @@ def load_tables(
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        df = spark.read.parquet(path)
+        schema, ns_cols = _footer_schema(name, path)
+        df = spark.read.schema(schema).parquet(path)
         # Timestamp normalization: ms/us parquet timestamps read natively as
         # TIMESTAMP_NTZ; TIMESTAMP(NANOS) columns arrive as long (nanosAsLong)
         # and are converted here to TIMESTAMP_NTZ at microsecond precision,
         # so every table exposes one timestamp type (matching the DuckDB
         # oracle's naive timestamps under the UTC session).
-        for col, unit in _ns_timestamp_columns(path):
-            if unit == "ns":
-                df = df.withColumn(
-                    col,
-                    F.timestamp_micros(F.expr(f"`{col}` div 1000")).cast(
-                        "timestamp_ntz"
-                    ),
-                )
+        for col in ns_cols:
+            df = df.withColumn(
+                col,
+                F.timestamp_micros(F.expr(f"`{col}` div 1000")).cast(
+                    "timestamp_ntz"
+                ),
+            )
         out[name] = df
     return out
 
 
-def _ns_timestamp_columns(path: str) -> list[tuple[str, str]]:
+def _footer_schema(table: str, path: str) -> tuple[StructType, list[str]]:
+    """The schema Spark infers for the parquet table at ``path`` in an
+    engine session, from one footer (any part of a multi-file table
+    carries it), plus the TIMESTAMP(NANOS) columns, which nanosAsLong
+    reads as BIGINT."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
-    import pyarrow.types as pat
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    if os.path.isdir(path):  # multi-file table: any part carries the schema
-        parts = sorted(
-            f for f in os.listdir(path) if f.endswith(".parquet")
-        )
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
         if not parts:
-            return []
+            raise FileNotFoundError(f"table {table}: no parquet file in {path}")
         path = os.path.join(path, parts[0])
-    schema = pq.read_schema(path)
-    return [
-        (f.name, f.type.unit)
-        for f in schema
-        if pat.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
+    footer = pq.read_metadata(path).schema
+    for i in range(len(footer)):
+        # pyarrow reads INT96 as timestamp[ns]; Spark reads it as TIMESTAMP
+        if footer.column(i).physical_type == "INT96":
+            raise TypeError(
+                f"table {table}: column {footer.column(i).path} is stored as"
+                " INT96, which the engine does not register"
+            )
+    fields, ns_cols = [], []
+    for f in footer.to_arrow_schema():
+        at = f.type
+        if pa.types.is_timestamp(at) and at.unit == "ns":
+            ns_cols.append(f.name)
+            at = pa.int64()
+        try:
+            dt = from_arrow_type(at, prefer_timestamp_ntz=True)
+        except PySparkTypeError as e:
+            raise TypeError(
+                f"table {table}: column {f.name} has type {f.type},"
+                " which has no Spark type"
+            ) from e
+        fields.append(StructField(f.name, dt, f.nullable))
+    return StructType(fields), ns_cols
 
 
 def register_views(

@@ -256,6 +256,16 @@ CASES = [
      " LOCATION '${system:test.tmp.dir}/hqd/ext';"
      " SELECT a, arr FROM hqd_ext",
      [(1, ["p", "q"])], [(2, "create_external_text")]),
+    # '|' and '.' are regex metacharacters; Hive splits on the literal
+    ("create_external_complex_text_regex_delims",
+     "DROP TABLE IF EXISTS hqd_ext3; DROP VIEW IF EXISTS hqd_ext3;"
+     " CREATE EXTERNAL TABLE hqd_ext3"
+     " (a INT, arr ARRAY<STRING>, m MAP<STRING,INT>)"
+     " ROW FORMAT DELIMITED FIELDS TERMINATED BY ','"
+     " COLLECTION ITEMS TERMINATED BY '|' MAP KEYS TERMINATED BY '.'"
+     " LOCATION '${system:test.tmp.dir}/hqd/ext3';"
+     " SELECT a, arr, m FROM hqd_ext3",
+     [(1, ["p", "q"], {"x": 1, "y": 2})], [(2, "create_external_text")]),
     ("create_external_plain_text",
      "DROP TABLE IF EXISTS hqd_ext2;"
      " CREATE EXTERNAL TABLE hqd_ext2 (a INT, b STRING)"
@@ -595,12 +605,15 @@ _PARAMS = [pytest.param(s, e, tr, id=i) for i, s, e, tr in CASES]
 def hqd(spark):
     os.makedirs(os.path.join(_SCR, "ext"), exist_ok=True)
     os.makedirs(os.path.join(_SCR, "ext2"), exist_ok=True)
+    os.makedirs(os.path.join(_SCR, "ext3"), exist_ok=True)
     with open(os.path.join(_SCR, "load.txt"), "w") as f:
         f.write("3,z\n")
     with open(os.path.join(_SCR, "ext", "data.txt"), "w") as f:
         f.write("1,p#q\n")
     with open(os.path.join(_SCR, "ext2", "data.txt"), "w") as f:
         f.write("4,w\n")
+    with open(os.path.join(_SCR, "ext3", "data.txt"), "w") as f:
+        f.write("1,p|q,x.1|y.2\n")
     run_script(spark, _SETUP)
     yield spark
     run_script(
@@ -611,6 +624,7 @@ def hqd(spark):
         " DROP TABLE IF EXISTS hqd_rn3; DROP TABLE IF EXISTS hqd_lf;"
         " DROP TABLE IF EXISTS hqd_fi; DROP TABLE IF EXISTS hqd_imp;"
         " DROP TABLE IF EXISTS hqd_ld; DROP VIEW IF EXISTS hqd_ext;"
+        " DROP VIEW IF EXISTS hqd_ext3;"
         " DROP TABLE IF EXISTS hqd_ext2; DROP TABLE IF EXISTS hqd_dp;"
         " DROP TABLE IF EXISTS hqd_xs; DROP TABLE IF EXISTS hqd_xd;"
         " DROP TABLE IF EXISTS hqd_cx; DROP TABLE IF EXISTS hqd_c;"
